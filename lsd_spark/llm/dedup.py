@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from lsd_spark.catalog import load
 from lsd_spark.registry import cached_plan, register
+from lsd_spark.sizing import spread
 
 N_HASHES = 16
 N_BANDS = 4
@@ -1087,9 +1088,9 @@ def llm_dedup_embcos_exact(spark, sf_dir):
 
     The streamed side of the BroadcastNestedLoopJoin is explicitly
     repartitioned: the fixture parquet is one input split, so without
-    it every pairwise cosine folds on ONE task (182.9 s at sf0.1,
-    round-8 VERDICT #3); spreading the stream across the cluster's
-    cores is embarrassingly parallel (per-row results bit-identical).
+    it every pairwise cosine folds on ONE task (182.9 s at sf0.1);
+    spreading the stream across the cluster's cores is embarrassingly
+    parallel (per-row results bit-identical).
     Norms are also precomputed once per row and joined through — one
     interpreted HOF fold (the dot) per pair instead of three, the
     same bit-identical dot/(na*nb) association the bucketed refine
@@ -1102,10 +1103,10 @@ def llm_dedup_embcos_exact(spark, sf_dir):
         F.col("vec_id").alias("vec_a"), F.col("embedding").alias("e_a"),
         norm.alias("n_a"),
     )
-    b = emb.select(
+    b = spread(emb.select(
         F.col("vec_id").alias("vec_b"), F.col("embedding").alias("e_b"),
         norm.alias("n_b"),
-    ).repartition(spark.sparkContext.defaultParallelism)
+    ))
     sim = F.round(
         F.expr(DOT_SPARK.format(a="e_a", b="e_b"))
         / (F.col("n_a") * F.col("n_b")),
@@ -1619,19 +1620,10 @@ def _minhash_scored_over(spark, sf_dir, docs, sig_tag):
     Jaccard refine; returns the thresholded
     (doc_a, doc_b, jaccard, mh_est) hit set, lazy.
 
-    Round 13 (guide §2.5 input skew): the signature projection is the
-    single heaviest compute of the whole dedup surface — H x
-    |shingle instances| md5+conv evaluations (3.1M at sf0.1, measured
-    4.3-4.7 s of q_dedup_minhash's 5.8 s) — and a small cached corpus
-    arrives as ONE partition, so it all ran in one task. When the
-    input has fewer partitions than cores, a round-robin repartition
-    of the tiny (doc_id, text) rows spreads the md5 stage across the
-    executor; at 100 TB the scan already arrives as thousands of
-    splits and the guard never fires, keeping the pass map-only."""
-    n_in = docs.rdd.getNumPartitions()
-    dp = spark.sparkContext.defaultParallelism
-    if n_in < dp:
-        docs = docs.repartition(dp)
+    The signature projection is the heaviest compute of the whole
+    dedup surface (H x |shingle instances| md5+conv evaluations, 3.1M
+    at sf0.1), so its input is spread over the cores first."""
+    docs = spread(docs)
     sig = ckpt_shared(
         spark, sf_dir, sig_tag,
         lambda: _shingled(docs).selectExpr(

@@ -36,6 +36,7 @@ from pyspark.sql import types as T
 
 from lsd_spark.catalog import load
 from lsd_spark.registry import register
+from lsd_spark.sizing import spread
 
 MM_SCHEMA = T.StructType(
     [
@@ -45,18 +46,6 @@ MM_SCHEMA = T.StructType(
         T.StructField("n_bytes", T.LongType()),
     ]
 )
-
-
-def _cpu_spread(df):
-    """Round-robin repartition to the session's core count before a
-    CPU-bound decode kernel: pure-python codecs cost 1-40 ms/doc, so
-    decode parallelism must equal COMPUTE parallelism even when the
-    fixture table arrives as one small parquet split (the round-11
-    10x sweep measured mm_decode_video at 309 s on one input
-    partition). At real scale the input partition count already
-    provides the parallelism and this collapses to a cheap shuffle
-    of (id, payload) rows."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def with_binary_payload(docs):
@@ -174,9 +163,7 @@ def mm_decode(spark, sf_dir):
     (width, height, channels, px_sum). The oracle recomputes px_sum
     arithmetically from the md5 hex: (N//16)*sum(digest) + sum of the
     first N%16 digest bytes. Exact integers end to end."""
-    docs = _cpu_spread(
-        load(spark, sf_dir, "documents").select("doc_id", "text")
-    )
+    docs = spread(load(spark, sf_dir, "documents").select("doc_id", "text"))
     encode, decode = _make_png_codec()  # driver-side; ships by value
 
     def roundtrip_kernel(batches):
@@ -270,9 +257,7 @@ def mm_resize(spark, sf_dir):
     the output-pixel sum; the oracle re-enumerates every pixel in SQL
     (unnest/generate_series), groups 2x2 blocks and recomputes the
     identical integer arithmetic. Exact end to end."""
-    docs = _cpu_spread(
-        load(spark, sf_dir, "documents").select("doc_id", "text")
-    )
+    docs = spread(load(spark, sf_dir, "documents").select("doc_id", "text"))
     encode, decode = _make_png_codec()  # driver-side; ships by value
 
     def resize_kernel(batches):
@@ -842,9 +827,7 @@ def mm_decode_png(spark, sf_dir):
     (channel mean == mean of the 16 digest bytes, exactly — the tile
     width is coprime with the channel stride). A fully hash-checked
     encode->decode round trip through a real on-disk format."""
-    docs = _cpu_spread(
-        load(spark, sf_dir, "documents").select("doc_id", "text")
-    )
+    docs = spread(load(spark, sf_dir, "documents").select("doc_id", "text"))
     # factory called DRIVER-side: the kernels capture the returned
     # closures, which cloudpickle ships by value (a direct reference
     # to the module-level factory would pickle by module path and
@@ -922,9 +905,7 @@ def mm_decode_gif(spark, sf_dir):
     mean-only PNG check. Same 100 TB shape as every mm_ kernel:
     opaque binary column between two Arrow-batched map-only stages,
     decode parallelism == data parallelism."""
-    docs = _cpu_spread(
-        load(spark, sf_dir, "documents").select("doc_id", "text")
-    )
+    docs = spread(load(spark, sf_dir, "documents").select("doc_id", "text"))
     encode, decode = _make_gif_codec()  # driver-side; ships by value
 
     def encode_kernel(batches):
@@ -1019,9 +1000,7 @@ def mm_decode_jpeg(spark, sf_dir):
     payloads — the same partition/batch shape a libjpeg-turbo UDF
     would have; swap the pure-python codec for the C library and
     the plan is unchanged."""
-    docs = _cpu_spread(
-        load(spark, sf_dir, "documents").select("doc_id", "text")
-    )
+    docs = spread(load(spark, sf_dir, "documents").select("doc_id", "text"))
     encode, decode = _make_jpeg_codec()  # driver-side; ships by value
 
     def kernel(batches):
@@ -1140,9 +1119,7 @@ def mm_phash_dedup(spark, sf_dir):
     At 100 TB: decode+hash is a map-only Arrow kernel; the dedup is
     one 8-byte-key groupBy (near-dup banding would reuse the simhash
     band join; exact pHash grouping is the common first pass)."""
-    docs = _cpu_spread(
-        load(spark, sf_dir, "documents").select("doc_id", "text")
-    )
+    docs = spread(load(spark, sf_dir, "documents").select("doc_id", "text"))
     encode, decode = _make_png_codec()  # driver-side; ships by value
 
     def kernel(batches):
@@ -1663,9 +1640,7 @@ def mm_decode_video(spark, sf_dir):
     100 TB: map-only Arrow kernel over opaque payloads, same plan as
     every mm_decode_*; swap the pure-python codecs for libavformat/
     libjpeg bindings and the plan is unchanged."""
-    docs = _cpu_spread(
-        load(spark, sf_dir, "documents").select("doc_id", "text")
-    )
+    docs = spread(load(spark, sf_dir, "documents").select("doc_id", "text"))
     jenc, jdec = _make_jpeg_codec()
     venc, vdec = _make_avi_codec()  # driver-side; closures ship by value
     sampled = list(range(0, VIDEO_N_FRAMES, VIDEO_STRIDE))
@@ -2074,13 +2049,8 @@ def mm_decode_video_ip(spark, sf_dir):
     the GOP sampling path is why a 1-in-30 frame sampler over
     inter-coded corpora costs GOP/30, not 1/30, of the codec work —
     the planning consequence the stand-in could only assert."""
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    # the kernel is CPU-bound (~40 ms/doc of pure-python DCT+SAD), so
-    # decode parallelism must equal COMPUTE parallelism even when the
-    # fixture table is one small parquet split — at real scale the
-    # input partition count already provides this and the repartition
-    # collapses to a no-op-sized shuffle of (id, text)
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
+    # the kernel is CPU-bound (~40 ms/doc of pure-python DCT+SAD)
+    docs = spread(load(spark, sf_dir, "documents").select("doc_id", "text"))
     ipenc, ipdec, ipdec_frame = _make_ipvideo_codec()
     venc, vdec = _make_avi_codec()
     # static data resolved DRIVER-SIDE: the kernel must close over

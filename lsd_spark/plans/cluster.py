@@ -38,6 +38,15 @@ from lsd_spark.catalog import load
 from lsd_spark.llm.dedup import EMBCOS_T, embcos_candidate_pairs_sql, embcos_near_pairs
 from lsd_spark.operators.joins import COS_DUCK, COS_SPARK
 from lsd_spark.registry import register
+from lsd_spark.sizing import (
+    COLLECT_LIMIT_ONE_JOB,
+    SHUFFLE_PARTITIONS,
+    capped_shuffle_partitions,
+    loop_partitions,
+    session_conf,
+    shuffle_partitions,
+    spread,
+)
 
 MAX_ITERS = 60
 
@@ -239,27 +248,15 @@ def min_label_fixpoint(
     iteration's checkpoint is unpersisted once superseded, and the
     loop runs on bounded shuffle partitions.
 
-    Concurrency note (round-13 VERDICT #4): this function flips
-    session-scoped confs (spark.sql.limit.initialNumPartitions,
-    spark.sql.shuffle.partitions) around its bounded collects and
-    restores them in finally blocks. That assumes SINGLE-THREADED
-    plan builds on the session — the registry/driver/bench contract
-    here. Concurrent plan builds on one SparkSession would race the
-    flip/restore; a deployment that builds plans from several driver
-    threads must serialize fixpoint construction (the collects
-    themselves are short control-plane jobs) or move these two confs
-    to session defaults."""
+    The bounded collects and loops run under `sizing.session_conf`
+    (see its single-threaded plan-build caveat)."""
     from pyspark.storagelevel import StorageLevel
 
     release_fixpoint_cache()  # previous call's consumers are done
     spark = emb.sparkSession
     if edges_bounded and local_labels is None:
-        old_lim = spark.conf.get("spark.sql.limit.initialNumPartitions", "1")
-        spark.conf.set("spark.sql.limit.initialNumPartitions", "100000")
-        try:
+        with session_conf(spark, COLLECT_LIMIT_ONE_JOB):
             e_pd = pairs.limit(EDGE_SINGLE_TASK_MAX + 1).toPandas()
-        finally:
-            spark.conf.set("spark.sql.limit.initialNumPartitions", old_lim)
         if len(e_pd) <= EDGE_SINGLE_TASK_MAX:
             LAST_FIXPOINT_PATH["path"] = "edges-collect"
             if nodes_from_edges:
@@ -350,9 +347,10 @@ def min_label_fixpoint(
             )
         # truncated: the graph is not small — discard and run the
         # distributed contraction below (rare; one settled-frame scan)
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(min(int(old_sp), 16)))
-    try:
+    sp = shuffle_partitions(spark)
+    with session_conf(
+        spark, {SHUFFLE_PARTITIONS: capped_shuffle_partitions(spark)}
+    ):
         # union-find sees each {u, v} once; direction is irrelevant
         # to connectivity, so the contraction job runs on the raw
         # one-way plan (edge-gen executes inside this job, fused) —
@@ -397,13 +395,7 @@ def min_label_fixpoint(
         # mapping returns as a broadcast LocalRelation, which
         # materializes with NO Spark job. len == cap+1 routes to the
         # heavy paths exactly like the old n_q > cap branch.
-        # initialNumPartitions high: CollectLimit otherwise probes one
-        # partition, then scales up 4x per extra JOB — three jobs to
-        # discover ~3k rows. One scan of the node-sized checkpoint is
-        # a single job.
-        old_lim = spark.conf.get("spark.sql.limit.initialNumPartitions", "1")
-        spark.conf.set("spark.sql.limit.initialNumPartitions", "100000")
-        try:
+        with session_conf(spark, COLLECT_LIMIT_ONE_JOB):
             q_pd = (
                 local_agg.filter(F.size("labels") > 1)
                 .select(
@@ -413,8 +405,6 @@ def min_label_fixpoint(
                 .limit(QUOTIENT_SINGLE_TASK_MAX + 1)
                 .toPandas()
             )
-        finally:
-            spark.conf.set("spark.sql.limit.initialNumPartitions", old_lim)
         n_q = len(q_pd)
         local = local_agg.select("vec_id", "lmin")
         if seed_complete:
@@ -517,24 +507,19 @@ def min_label_fixpoint(
         )
         n_half_edges = 2 * one_way.count()  # = 2E, on the checkpoint
         n_nodes = max(1, _node_count(emb))
-        # size the loop's shuffles to the measured edge count (~100k
-        # edge-rows per partition): iterative stages on a tiny
-        # quotient graph should not pay 16 near-empty tasks per
-        # round — the same call AQE's coalesce makes when enabled
-        loop_sp = max(1, min(int(old_sp), n_half_edges // 100_000 + 1))
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_sp))
-        if n_half_edges / n_nodes > DEGREE_SUPERCRITICAL:
-            labels.unpersist()
-            LAST_FIXPOINT_PATH["path"] = "alternating"
-            out = _alternating_loop(emb, edges)
+        with session_conf(
+            spark, {SHUFFLE_PARTITIONS: loop_partitions(n_half_edges, sp)}
+        ):
+            if n_half_edges / n_nodes > DEGREE_SUPERCRITICAL:
+                labels.unpersist()
+                LAST_FIXPOINT_PATH["path"] = "alternating"
+                out = _alternating_loop(emb, edges)
+                one_way.unpersist()
+                return out
+            LAST_FIXPOINT_PATH["path"] = "min-label"
+            out = _fixpoint_loop(emb, edges, labels)
             one_way.unpersist()
             return out
-        LAST_FIXPOINT_PATH["path"] = "min-label"
-        out = _fixpoint_loop(emb, edges, labels)
-        one_way.unpersist()
-        return out
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
 
 
 # Average-degree threshold for routing to the log-round CC path: 2-D
@@ -698,12 +683,10 @@ def alternating_cc(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     per round (lineage truncation), superseded checkpoints
     unpersisted, bounded shuffle partitions, RAISES on cap."""
     spark = nodes.sparkSession
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(min(int(old_sp), 16)))
-    try:
+    with session_conf(
+        spark, {SHUFFLE_PARTITIONS: capped_shuffle_partitions(spark)}
+    ):
         return _alternating_loop(nodes, pairs)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
 
 
 def _canon(e: DataFrame) -> DataFrame:
@@ -875,9 +858,7 @@ def cluster_fof_exact(spark, sf_dir):
                     }
                 )
 
-    b = emb.select("vec_id", "embedding").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    b = spread(emb.select("vec_id", "embedding"))
     cand = b.mapInPandas(
         kernel, "u bigint, v bigint, dot double, n_a double, n_b double"
     )

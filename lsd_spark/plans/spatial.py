@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from lsd_spark import sizing
 from lsd_spark.catalog import load, session_key
 from lsd_spark.plans.zones import rank_nearest
 from lsd_spark.registry import register
@@ -72,23 +73,14 @@ _CAND_SQL = (
 def points(spark, sf_dir: str, etype: str, spread: bool = False) -> DataFrame:
     """(event_id, x, y) for one event type on the synthetic plane.
 
-    `spread=True` round-robins the filtered ids across
-    defaultParallelism BEFORE the md5 projection: a small cached
-    events table arrives as ONE partition, and everything downstream
-    of it (the double-md5 derivation, a probe-side explode, a join's
-    streamed side) inherits that single task — the round-8
-    cluster_fof_exact lesson, round 12: q_fof's whole edge
-    generation ran serially (0.6 s of its 1.0 s budget). The shuffle
-    moves only (event_id) rows pre-derivation; at 100 TB the scan
-    arrives already wide and the exchange is a cheap width guard on
-    the dominant compute stage."""
+    `spread=True` round-robins the filtered ids (`sizing.spread`)
+    BEFORE the md5 projection, so the derivation and everything
+    downstream of it run on every core; only (event_id) rows move."""
     ev = load(spark, sf_dir, "events").filter(
         F.col("event_type") == etype
     )
     if spread:
-        ev = ev.select("event_id").repartition(
-            spark.sparkContext.defaultParallelism
-        )
+        ev = sizing.spread(ev.select("event_id"))
     x = (
         F.expr(
             "CAST(conv(substr(md5(CAST(event_id AS STRING) || 'x'), 1, 15), 16, 10) AS BIGINT)"
@@ -600,8 +592,7 @@ def self_radius_pairs(spark, sf_dir: str, etype: str, radius: float):
     )
     # probe side spread=True: the exploded 5x probe copies and the
     # join's streamed distance refine are the dominant compute of the
-    # whole FoF job — on a 1-partition cached input they all ran in
-    # ONE task (round-12 profile: 0.6 s serial vs ~0.1 s spread)
+    # whole FoF job
     pts = points(spark, sf_dir, etype, spread=True)
     l = pts.select(
         F.col("event_id").alias("u"),
@@ -742,24 +733,7 @@ def tiled_local_labels(spark, sf_dir: str, etype: str, radius: float) -> DataFra
             "event_id", "x", "y", "cx", "cy",
             F.col("t.tx").alias("tx"), F.col("t.ty").alias("ty"),
         )
-        # Explicit kernel-stage partition count (round-14, guide §2.2
-        # + §4: a Python kernel's per-ROW cost dwarfs the per-BYTE
-        # cost AQE's advisory sizing assumes, so the keyless
-        # repartition either under-splits — AQE coalesced the 10x
-        # stress dir to 4 partitions of 63k rows, serializing the
-        # kernel — or over-splits at a stock 200-partition session).
-        # max(cores, input scan splits) scales with BOTH the session
-        # (the driver's low-core bench run keeps its proportional
-        # share) and the data (a 100 TB scan arrives as thousands of
-        # splits); per-task memory stays bounded by the in-kernel
-        # row batching below, not by the partition count.
-        .repartition(
-            max(
-                spark.sparkContext.defaultParallelism,
-                pts.rdd.getNumPartitions(),
-            ),
-            F.col("tx"), F.col("ty"),
-        )
+        .repartition(sizing.kernel_width(pts), F.col("tx"), F.col("ty"))
     )
     def kernel(batches):
         # self-contained on purpose: closing over module-level helpers

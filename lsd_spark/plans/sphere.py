@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from lsd_spark.catalog import load
 from lsd_spark.registry import register
+from lsd_spark.sizing import cpu_join_inputs, shuffle_width, spread
 
 R_SPHERE = 1.0  # match radius in degrees; zone height == radius
 
@@ -202,24 +203,8 @@ def sphere_xmatch(
             "int"
         )
 
-    # Input spread (round 14, same §2.5 guard as the minhash
-    # signature pass): a small cached point table arrives as 1-3
-    # partitions, so the bucket/cells/salt map stage — the explode
-    # and the shuffle WRITE of the probe rows — ran in that many
-    # tasks whatever the join parallelism (measured: the whole
-    # pipeline flat 8 vs 32 cores at the 10x dir). When the input
-    # has fewer partitions than cores, round-robin the point rows
-    # first; a real multi-split 100 TB scan is untouched.
-    spark = l_pts.sparkSession
-    dp = spark.sparkContext.defaultParallelism
-
-    def _spread(df):
-        if df.isStreaming:  # micro-batch sizing is the source's call
-            return df
-        return df.repartition(dp) if df.rdd.getNumPartitions() < dp else df
-
-    l_pts = _spread(l_pts)
-    r_pts = _spread(r_pts)
+    l_pts = spread(l_pts)
+    r_pts = spread(r_pts)
 
     r = r_pts.select(
         F.col("event_id").alias("r_id"),
@@ -287,36 +272,8 @@ def sphere_xmatch(
     )
 
     dist = F.expr(DIST_SPHERE.format(ldec="ldec", rdec="rdec", lra="lra", rra="rra"))
-    # Explicit join parallelism (round 14, guide §2.2): the cell join
-    # is the one shape whose POST-shuffle work is CPU-heavy — every
-    # same-cell candidate pair pays the haversine — so running it at
-    # the session's (bench-scale: 4) shuffle partitions caps the
-    # speedup at 4 tasks however many cores the executor has
-    # (measured: 10x dir, 8 vs 32 cores both ~7.2s, flat). Hash-
-    # partitioning both sides to max(cores, session shuffle
-    # partitions) replaces the planner's ENSURE_REQUIREMENTS
-    # exchanges one-for-one (same exchange count — the join reuses
-    # the explicit partitioning) and lets the refine scale with the
-    # executor; a deployment's tuned shuffle.partitions still wins
-    # when larger.
-    # Only when the session's shuffle sizing is BELOW the core count
-    # (the bench's 4-partition small-shuffle tuning) does the
-    # explicit repartition pay for itself; a deployment-tuned
-    # shuffle.partitions >= cores already gives the join its
-    # parallelism, and at broadcast-size inputs the planner's BHJ
-    # makes any hash repartition pure overhead.
-    # Streaming plans are exempt (same reasoning as _spread): the
-    # stream-static join should keep the planner's per-batch
-    # broadcast of the static side — forcing both sides onto a hash
-    # exchange would shuffle the reference catalog EVERY micro-batch
-    # and size the probe shuffle for a full-table batch that a
-    # micro-batch never is.
-    is_streaming = l.isStreaming or r.isStreaming
-    if not is_streaming and dp > int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    ):
-        l = l.repartition(dp, F.col("z"), F.col("b"), F.col("salt"))
-        r = r.repartition(dp, F.col("z"), F.col("b"), F.col("salt"))
+    # the haversine refine runs post-shuffle on every same-cell pair
+    l, r = cpu_join_inputs(l, r, "z", "b", "salt")
     return (
         l.join(r, ["z", "b", "salt", *extra_keys])
         .withColumn("dist", dist)
@@ -1129,16 +1086,8 @@ def sink_density_adaptive(spark, sf_dir):
     from lsd_spark.plans.materialize import materialized
 
     def build(tmp: str) -> str:
-        # Keyed repartition inherits spark.sql.shuffle.partitions; in
-        # a session sized for small shuffles (4-8) that leaves 3072
-        # cell dirs to as few write tasks, each creating hundreds of
-        # files serially (52 s at sf0.1). Widening to at least the
-        # core count keeps one file per cell (each key still lands in
-        # exactly one task) and parallelizes the file creation (10 s).
-        width = max(
-            spark.sparkContext.defaultParallelism,
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-        )
+        # one task per cell dir, and the file creation spread over cores
+        width = shuffle_width(spark)
         (
             adaptive_layout_frame(spark, sf_dir)
             .repartition(width, "nside", "cell")

@@ -532,7 +532,7 @@ _R11_TOUCHED: list[str] = [
     "agg_density_adaptive",
     "sink_density_adaptive",
     # round-11 10x-sweep finding: CPU-bound decode kernels ran on ONE
-    # input partition (mm_decode_video 309 s serial) — _cpu_spread
+    # input partition (mm_decode_video 309 s serial) — sizing.spread
     # repartitions to core count ahead of the kernel (plan change)
     "mm_decode",
     "mm_resize",

@@ -16,6 +16,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from lsd_spark import sizing
+
 
 def _listing_parallelism(cores: int) -> str:
     """Task count for distributed partition-discovery listing jobs.
@@ -95,7 +97,7 @@ def apply_session_defaults(spark: SparkSession) -> SparkSession:
     try:
         spark.conf.set(
             "spark.sql.sources.parallelPartitionDiscovery.parallelism",
-            _listing_parallelism(spark.sparkContext.defaultParallelism),
+            _listing_parallelism(sizing.cores(spark)),
         )
     except Exception:
         pass  # non-settable on exotic builds; default is only slower

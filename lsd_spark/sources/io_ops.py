@@ -25,6 +25,7 @@ from pyspark.sql import types as T
 
 from lsd_spark.catalog import load
 from lsd_spark.registry import register
+from lsd_spark.sizing import SHUFFLE_PARTITIONS, session_conf, stream_state_partitions
 
 DOC_SCHEMA = T.StructType(
     [
@@ -498,30 +499,26 @@ def stream_foreach_sink(spark, sf_dir):
     GROUP BY count over all events."""
     import tempfile as _tf
 
-    from lsd_spark.streaming.ops import _run_stream  # lazy: avoid cycle
-
     out_dir = _tf.mkdtemp(prefix="lsd_fsink_") + "/out"
 
     # _run_stream expects a memory sink; here we drive our own query
     path = f"{sf_dir}/events.parquet"
-    old_nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stage = _tf.mkdtemp(prefix="lsd_fsink_src_")
-    os.symlink(os.path.abspath(path), f"{stage}/events.parquet")
-    src = spark.readStream.schema(spark.read.parquet(path).schema).parquet(stage)
-    agg = src.groupBy("event_type").agg(F.count("*").alias("cnt"))
+    with session_conf(
+        spark,
+        {
+            "spark.sql.legacy.parquet.nanosAsLong": "true",
+            SHUFFLE_PARTITIONS: stream_state_partitions(spark),
+        },
+    ):
+        stage = _tf.mkdtemp(prefix="lsd_fsink_src_")
+        os.symlink(os.path.abspath(path), f"{stage}/events.parquet")
+        src = spark.readStream.schema(spark.read.parquet(path).schema).parquet(stage)
+        agg = src.groupBy("event_type").agg(F.count("*").alias("cnt"))
 
-    def write_batch(batch_df, batch_id):
-        batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
+        def write_batch(batch_df, batch_id):
+            batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
 
-    ckpt = _tf.mkdtemp(prefix="lsd_fsink_ckpt_")
-    from lsd_spark.streaming.ops import stream_state_partitions
-
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(spark))
-    )
-    try:
+        ckpt = _tf.mkdtemp(prefix="lsd_fsink_ckpt_")
         q = (
             agg.writeStream.foreachBatch(write_batch)
             .outputMode("complete")
@@ -530,12 +527,6 @@ def stream_foreach_sink(spark, sf_dir):
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        if old_nanos is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", old_nanos)
     # complete-mode foreachBatch: EVERY batch dir is a full aggregate
     # snapshot, so read back only the LAST one — unioning batch=* would
     # double-count if availableNow ever split the replay into >1
@@ -861,12 +852,10 @@ def sink_partition_overwrite(spark, sf_dir):
     ev.write.partitionBy("event_type").mode("overwrite").parquet(tbl)
     clicks = ev.filter(F.col("event_type") == "click")
     batch = clicks.unionByName(clicks)  # the replacement payload
-    old_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with session_conf(
+        spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    ):
         batch.write.partitionBy("event_type").mode("overwrite").parquet(tbl)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
     out = (
         spark.read.parquet(tbl)
         .groupBy("event_type")

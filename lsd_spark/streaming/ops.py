@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from lsd_spark.catalog import load, normalize_ts, table_path
 from lsd_spark.registry import register
+from lsd_spark.sizing import SHUFFLE_PARTITIONS, session_conf, stream_state_partitions
 
 
 @register(
@@ -176,35 +177,6 @@ def staged_stream_source(spark, sf_dir: str, batches: int):
     return normalize_ts(reader.parquet(stage))
 
 
-def stream_state_partitions(spark, python_state: bool = False) -> int:
-    """Shuffle/state partition count for the fixture-scale streaming
-    queries (guide §2.2 fewer-larger partitions): every state
-    partition costs per-micro-batch commit files and store open/close
-    whatever it holds — measured 11.7 s (16) -> 4.0 s (4) on the
-    stream-stream join at sf0.1, identical sink rows. Follows the
-    session's own shuffle sizing (bench/tests size it to the data),
-    capped at the historical 16 so a stock 200-partition session
-    behaves exactly as before; override via
-    LSD_STREAM_STATE_PARTITIONS. At 100 TB size this to the key
-    cardinality BEFORE the first checkpoint write (the count is
-    frozen into the checkpoint and not re-sizeable after).
-
-    `python_state` flips the trade-off: an applyInPandasWithState op
-    does real per-key Python work in the state partition's worker, so
-    partitions are the op's Python parallelism, not just store
-    overhead — interleaved A/B on stream_custom_state at sf0.1:
-    4 partitions median 5.85 s vs 8 partitions 4.44 s (identical sink
-    rows; the JVM-stateful floor on the same replay is ~1.9 s). Such
-    ops take a floor of 8 under the same 16 cap, leaving a stock
-    200-partition session at 16 exactly as before."""
-    env = int(os.environ.get("LSD_STREAM_STATE_PARTITIONS", "0"))
-    if env > 0:
-        return env
-    old_sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    floor = 8 if python_state else 1
-    return min(16, max(floor, old_sp))
-
-
 def _run_stream(
     spark, sf_dir, build, mode: str, batches: int = 4,
     python_state: bool = False,
@@ -220,24 +192,10 @@ def _run_stream(
     src = staged_stream_source(spark, sf_dir, batches)
     name = "lsd_stream_" + uuid.uuid4().hex[:12]
     ckpt = tempfile.mkdtemp(prefix="lsd_ckpt_")
-    # The state-store partition count is frozen into the checkpoint at
-    # first start; a stock session's 200 partitions means 200 state
-    # dirs + 200 Python workers per micro-batch for a ~100k-row
-    # fixture. At 100 TB you'd size this to the key cardinality BEFORE
-    # the first checkpoint write (it is not re-sizeable after).
-    # Round 13 (guide §2.2 fewer-larger partitions): every state
-    # partition costs per-micro-batch commit files and store open/close
-    # whatever it holds — measured 11.7 s (16) -> 4.0 s (4) on the
-    # stream-stream join at sf0.1, identical sink rows. Follow the
-    # session's own shuffle sizing (bench/tests size it to the data),
-    # capped at the old 16 so a stock 200-partition session behaves as
-    # before; override via LSD_STREAM_STATE_PARTITIONS.
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(stream_state_partitions(spark, python_state=python_state)),
-    )
-    try:
+    with session_conf(
+        spark,
+        {SHUFFLE_PARTITIONS: stream_state_partitions(spark, python_state)},
+    ):
         q = (
             build(src)
             .writeStream.format("memory")
@@ -248,8 +206,6 @@ def _run_stream(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
     return spark.table(name)
 
 
@@ -699,11 +655,9 @@ def stream_parquet_sink(spark, sf_dir):
     base = tempfile.mkdtemp(prefix="lsd_psink_")
     out_dir = f"{base}/out"
     ckpt = f"{base}/ckpt"
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(spark))
-    )
-    try:
+    with session_conf(
+        spark, {SHUFFLE_PARTITIONS: stream_state_partitions(spark)}
+    ):
         q = (
             src.writeStream.format("parquet")
             .option("path", out_dir)
@@ -713,8 +667,6 @@ def stream_parquet_sink(spark, sf_dir):
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
     back = spark.read.parquet(out_dir)  # honors _spark_metadata
     out = (
         back.groupBy("event_type")

@@ -443,23 +443,30 @@ def test_healpix_nest_sql_matches_numpy_and_ring_partition(spark):
 
 
 def test_streaming_xmatch_skips_explicit_join_repartition(spark, tmp_path):
-    """The cores-aware join repartition (round 14) must fire for batch
-    plans when the session's shuffle sizing is below the core count,
-    and must NOT fire for streaming plans — the stream-static join
-    keeps the planner's per-batch broadcast of the static side."""
+    """The cores-aware join repartition must fire for batch plans when
+    the session's shuffle sizing is below the core count, also when
+    the inputs are broadcast-sized (AQE re-plans the join from the
+    keyed stages' runtime sizes), and must NOT fire for streaming
+    plans: the stream-static join keeps the planner's per-batch
+    broadcast of the static side."""
+    from lsd_spark.sizing import SHUFFLE_PARTITIONS, session_conf
+
     rows = [(i, float(i % 360), float(i % 120) - 60.0) for i in range(50)]
-    static = _df(spark, rows)
     stage = str(tmp_path / "pts")
-    static.write.mode("overwrite").parquet(stage)
+    _df(spark, rows).write.mode("overwrite").parquet(stage)
+    # file-backed, so the planner has a broadcast-sized estimate
+    static = spark.read.parquet(stage)
     stream = spark.readStream.schema(static.schema).parquet(stage)
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    try:
-        batch_plan = sphere_xmatch(static, static, R_SPHERE)._jdf.queryExecution().analyzed().toString()
-        stream_plan = sphere_xmatch(stream, static, R_SPHERE)._jdf.queryExecution().analyzed().toString()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    def analyzed(l, r):
+        return sphere_xmatch(l, r, R_SPHERE)._jdf.queryExecution().analyzed().toString()
 
+    with session_conf(spark, {SHUFFLE_PARTITIONS: 1}):
+        batch = sphere_xmatch(static, static, R_SPHERE)
+        batch_plan = batch._jdf.queryExecution().analyzed().toString()
+        physical = batch._jdf.queryExecution().executedPlan().toString()
+        stream_plan = analyzed(stream, static)
+
+    assert "BroadcastExchange" in physical
     assert "RepartitionByExpression" in batch_plan
     assert "RepartitionByExpression" not in stream_plan

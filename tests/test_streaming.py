@@ -252,7 +252,7 @@ def test_state_partition_sizing_python_state_floor(spark):
     small-shuffle sessions keep the op's Python parallelism, while
     JVM-state ops follow the session sizing down; both stay capped at
     the historical 16 so a stock 200-partition session is unchanged."""
-    from lsd_spark.streaming.ops import stream_state_partitions
+    from lsd_spark.sizing import stream_state_partitions
 
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     try:

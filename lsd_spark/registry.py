@@ -33,7 +33,9 @@ session DataFrames bound to a dead one.
 from __future__ import annotations
 
 import functools
+import json
 from collections.abc import Callable
+from pathlib import Path
 from typing import Any
 
 from lsd_spark.catalog import session_key
@@ -177,457 +179,36 @@ def register(name: str, oracle: str | None = None, cacheable: bool = True):
     return deco
 
 
-# The driver's CORRECTNESS ledger records exactly the FIRST 50
-# registered ops per round (observed in r01 and r02). Registration
-# order is therefore tiered so each round's 50 maximize *cumulative*
-# coverage: r01 recorded _R1_LEDGER, r02 recorded _R2_LEDGER (the
-# reorder worked exactly as designed), so r03 leads with the 51 ops
-# that still have no driver row, then ops new this round, then the
-# 100 already-recorded ids. If the driver ever runs all of them this
-# changes nothing.
-_R1_LEDGER = [
-    "scan_full", "scan_projection", "scan_partition_prune",
-    "project_expr", "filter_simple", "filter_compound", "filter_null",
-    "filter_between_range", "agg_global", "agg_groupby_hash",
-    "agg_distinct", "agg_count_distinct", "agg_approx_distinct",
-    "agg_having", "agg_grouping_sets", "agg_multi_column",
-    "agg_histogram", "agg_density_map_2d", "agg_percentiles",
-    "agg_pivot", "agg_stats_corr", "join_inner_hash",
-    "join_left_outer", "join_multiway", "join_semi", "join_anti",
-    "join_broadcast", "join_theta_range", "join_asof_nearest",
-    "join_xmatch_radius_knn", "join_cross", "win_row_number",
-    "win_rank_dense", "win_lag_lead", "win_running_frame",
-    "win_range_frame", "win_ntile_percent", "win_first_last",
-    "sort_multi", "topk_agg", "limit_offset", "set_union_all",
-    "set_union_distinct", "set_intersect", "set_except",
-    "set_except_all", "fn_string", "fn_string_split", "fn_date",
-    "fn_math",
-]
+# Why order matters: the driver's CORRECTNESS ledger records only the
+# FIRST 50 registered ops per round, in registration order, into
+# CORRECTNESS_rNN.json. load_all() therefore reorders the registry so
+# each round's 50 rows maximize *cumulative* coverage. A driver that
+# runs every op is unaffected.
+
+# Last ledger read: r14 re-recorded _TOUCHED, so reading it moves the window.
+_LEDGER_ROUNDS = 13
 
 
-# The 50 ops recorded by the round-2 driver run (verified: the r02
-# ledger keys are exactly the round-1-registered ops r01 truncated).
-_R2_LEDGER = [
-    "fn_conditional", "fn_cast", "fn_array", "fn_array_explode",
-    "fn_json", "fn_map", "fn_bitwise", "udf_scalar_vectorized",
-    "udaf_grouped_agg", "udtf_flatmap", "llm_dedup_exact",
-    "llm_dedup_near", "llm_dedup_simhash", "llm_dedup_ngram",
-    "llm_dedup_embcos", "llm_dedup_keep_first", "llm_fingerprint",
-    "llm_sample_hash", "llm_simsearch_knn", "knn_ivf", "knn_lsh",
-    "llm_text_stats", "llm_quality_score", "llm_token_count",
-    "llm_lang_id", "llm_tfidf_topterms", "llm_pipeline_e2e",
-    "llm_multimodal_join", "mm_binary_features", "mm_decode_stub",
-    "mm_resize_stub", "mm_frame_sample_stub", "stream_tumbling",
-    "stream_sliding", "stream_session", "stream_watermark_late",
-    "stream_dedup", "stream_stateful_count", "stream_custom_state",
-    "source_text_import", "sink_into", "sink_output_formats",
-    "sink_bucketed", "source_schema_evolution", "sink_snapshot",
-    "join_asof_zoned", "xmatch_consume", "cluster_fof",
-    "join_skew_salted", "join_asof_margin",
-]
+def _load_ledger_history() -> list[tuple[int, list[str]]]:
+    """(round, op ids in the driver's recording order) for rounds
+    1.._LEDGER_ROUNDS, read from the committed ledgers. Only the driver
+    imports the registry (workers get kernels by value), and the engine
+    runs from a checkout, so a missing ledger is an error."""
+    root = Path(__file__).resolve().parents[1]
+    return [
+        (n, list(json.loads(
+            (root / f"CORRECTNESS_r{n:02d}.json").read_text())))
+        for n in range(1, _LEDGER_ROUNDS + 1)
+    ]
 
 
-# The 50 ops recorded by the round-3 driver run (all green — the
-# exact key list of CORRECTNESS_r03.json).
-_R3_LEDGER = [
-    "mm_decode", "mm_resize", "mm_frame_sample", "agg_cube",
-    "agg_density_multilevel", "agg_filtered", "agg_funnel_conversion",
-    "agg_lightcurve_stats", "agg_path_sequences",
-    "agg_retention_cohorts", "cluster_fof_2d",
-    "filter_scalar_subquery", "fn_anonymize", "fn_morton_key",
-    "fn_unpivot", "fn_vector_math", "graph_degree_hist",
-    "join_asof_union_window", "join_full_outer",
-    "join_interval_overlap", "join_xmatch_2d", "join_xmatch_2d_knn",
-    "join_xmatch_2d_margin", "knn_ivf_kmeans", "llm_bm25_score",
-    "llm_char_entropy", "llm_decontaminate", "llm_dedup_edit",
-    "llm_dedup_keep_best", "llm_mix_sources", "llm_pack_sequences",
-    "llm_pipeline_mm", "llm_repetition_score",
-    "llm_sample_stratified", "llm_unigram_logprob", "llm_winnowing",
-    "merge_upsert", "profile_table", "set_intersect_all",
-    "sink_compact", "snapshot_diff", "source_fits_datasource",
-    "source_fits_import", "stream_foreach_sink",
-    "stream_session_real", "stream_static_join", "stream_stream_join",
-    "win_cume_dist", "win_rolling_median", "xmatch_2d_count",
-]
+_LEDGER_HISTORY = _load_ledger_history()
 
-
-# Tier 1 for the round-4 ledger: the 30 oracle-bearing ops with no
-# GREEN driver row anywhere in r01∪r02∪r03. Two groups:
-#   (a) 18 round-3 additions that fell past r03's 50-row cap;
-#   (b) 12 ops whose r02 row was `err: no_oracle` — full oracles
-#       have since been added, so a re-record upgrades them to
-#       hash-verified.
-# Deliberately EXCLUDED (they stay in tier 3): agg_approx_distinct
-# and llm_dedup_near — rows-only by design (HLL approx / xxhash64
-# has no portable mirror); the driver can never record more than the
-# `no_oracle` rows it already has for them, so queueing them would
-# waste two of the 50 capped slots.
-_R4_PENDING = [
-    # (a) round-3 additions, never recorded
-    "join_xmatch_sphere", "join_xmatch_sphere_knn",
-    "join_xmatch_sphere_margin", "xmatch_sphere_count",
-    "agg_density_sphere", "fn_healpix_key", "fn_healpix_nest",
-    "agg_phase_fold", "agg_period_search", "graph_pagerank",
-    "llm_cluster_assign", "cluster_fof_2d_super", "cluster_fof_exact",
-    "llm_dedup_embcos_exact", "mm_decode_png", "mm_decode_wav",
-    "source_fits_scaled", "sink_fits",
-    # (b) r02 `no_oracle` rows, oracles since added
-    "source_text_import", "sink_into", "sink_output_formats",
-    "stream_watermark_late", "stream_dedup", "stream_stateful_count",
-    "knn_ivf", "knn_lsh", "llm_lang_id", "sink_bucketed",
-    "source_schema_evolution", "sink_snapshot",
-]
-
-
-# The 50 ops recorded by the round-4 driver run (and re-recorded
-# verbatim by round 5) — the exact key list of CORRECTNESS_r04.json
-# == CORRECTNESS_r05.json, all green.
-_R4_LEDGER = [
-    "join_xmatch_sphere", "join_xmatch_sphere_knn",
-    "join_xmatch_sphere_margin", "xmatch_sphere_count",
-    "agg_density_sphere", "fn_healpix_key", "fn_healpix_nest",
-    "agg_phase_fold", "agg_period_search", "graph_pagerank",
-    "llm_cluster_assign", "cluster_fof_2d_super", "cluster_fof_exact",
-    "llm_dedup_embcos_exact", "mm_decode_png", "mm_decode_wav",
-    "source_fits_scaled", "sink_fits", "source_text_import",
-    "sink_into", "sink_output_formats", "stream_watermark_late",
-    "stream_dedup", "stream_stateful_count", "knn_ivf", "knn_lsh",
-    "llm_lang_id", "sink_bucketed", "source_schema_evolution",
-    "sink_snapshot", "agg_variability_eta", "win_streak",
-    "win_sessionize", "llm_ngram_freq", "llm_oov_rate", "merge_scd2",
-    "agg_object_coadd", "fn_fits_keyword", "llm_mix_temperature",
-    "filter_region_cone", "filter_region_poly",
-    "filter_region_algebra", "filter_region_healpix",
-    "filter_region_time", "join_point_in_polygon", "fn_equgal",
-    "fn_galequ", "agg_proper_motion", "fn_sexagesimal",
-    "agg_sky_coverage",
-]
-
-
-# Rows-only-by-design ops never upgrade past a `no_oracle` row, so
-# queueing them in the refresh rotation would waste capped slots.
-_ROWS_ONLY_BY_DESIGN = {"agg_approx_distinct", "llm_dedup_near"}
-
-
-# The 50 ops recorded by the round-6 driver run (all green — the
-# exact key list of CORRECTNESS_r06.json): the 38 round-6 additions
-# plus the head of round 6's touched-plan re-verification queue.
-_R6_LEDGER = [
-    "agg_resample_gapfill", "agg_sample_reservoir",
-    "agg_drift_chi2", "agg_quantile_sketch", "agg_sigma_clip",
-    "agg_structure_function", "agg_referential_audit",
-    "join_bloom_prune", "win_interpolate_linear", "win_ewma",
-    "llm_dedup_containment", "llm_dedup_semantic",
-    "llm_embed_quantize", "knn_ivf_sq8", "llm_dedup_substring",
-    "llm_dedup_incremental", "llm_dedup_minhash_md5",
-    "llm_dedup_cluster", "llm_dedup_url", "llm_pii_redact",
-    "mm_phash_dedup", "stream_xmatch_sphere", "source_jsonl_import",
-    "graph_triangle_count", "sink_margin_refresh",
-    "source_packed_id", "sink_zorder", "join_tracklet_link",
-    "agg_density_adaptive", "join_xmatch_sphere_chain",
-    "agg_angular_corr", "join_xmatch_bayes", "join_xmatch_mutual",
-    "agg_completeness_mag", "llm_chunk_docs",
-    "llm_split_stratified", "scan_partition_prune_dynamic",
-    "fn_mjd_convert", "llm_dedup_embcos", "llm_dedup_ngram",
-    "llm_dedup_edit", "llm_pipeline_e2e", "cluster_fof",
-    "cluster_fof_2d", "llm_dedup_keep_best", "agg_object_coadd",
-    "agg_variability_eta", "stream_watermark_late", "stream_dedup",
-    "stream_stateful_count",
-]
-
-
-# The 50 ops recorded by the round-7 driver run (all green — the
-# exact key list of CORRECTNESS_r07.json): the 38 round-7 additions,
-# 2 touched plans, and the head of the refresh rotation.
-_R7_LEDGER = [
-    "agg_autocorr", "agg_weighted_median", "agg_gini",
-    "agg_benford", "agg_heatmap_hour_dow", "agg_theilsen_slope",
-    "agg_approx_distinct_portable", "agg_rollup",
-    "agg_count_min_sketch", "agg_mode_deterministic",
-    "join_lateral_topn", "win_zscore_anomaly", "win_cusum_drift",
-    "win_mad_robust", "win_pct_change", "set_symmetric_diff",
-    "fn_variant", "fn_arg_extrema", "fn_struct_nested",
-    "udtf_lateral_native", "llm_embed_stats", "llm_filter_rules",
-    "llm_bpe_pairs", "llm_ngram_novelty", "llm_source_overlap",
-    "stream_topk_windowed", "stream_parquet_sink",
-    "merge_cdc_apply", "sink_partition_overwrite",
-    "source_orc_roundtrip", "sink_file_manifest",
-    "source_csv_malformed", "join_xmatch_pm_epoch",
-    "agg_hess_diagram", "join_self_nearest_sphere",
-    "llm_sample_importance", "agg_dipole_sky",
-    "agg_galactic_profile", "graph_degree_hist",
-    "llm_dedup_cluster", "scan_full", "scan_projection",
-    "scan_partition_prune", "project_expr", "filter_simple",
-    "filter_compound", "filter_null", "filter_between_range",
-    "agg_global", "agg_groupby_hash",
-]
-
-
-# The 50 ops recorded by the round-8 driver run (all green — the
-# exact key list of CORRECTNESS_r08.json): 1 round-8 addition
-# (mm_decode_jpeg), the 21 touched plans, and the head of the
-# refresh rotation.
-_R8_LEDGER = [
-    "mm_decode_jpeg", "agg_gini", "agg_autocorr", "llm_embed_stats",
-    "merge_cdc_apply", "source_csv_malformed", "llm_dedup_ngram",
-    "llm_dedup_containment", "llm_pipeline_mm", "graph_degree_hist",
-    "llm_dedup_embcos", "graph_pagerank", "graph_triangle_count",
-    "llm_dedup_keep_best", "cluster_fof", "llm_dedup_minhash_md5",
-    "llm_dedup_cluster", "llm_dedup_edit", "snapshot_diff",
-    "set_symmetric_diff", "llm_dedup_simhash",
-    "agg_count_min_sketch", "agg_distinct", "agg_count_distinct",
-    "agg_having", "agg_grouping_sets", "agg_multi_column",
-    "agg_histogram", "agg_density_map_2d", "agg_percentiles",
-    "agg_pivot", "agg_stats_corr", "join_inner_hash",
-    "join_left_outer", "join_multiway", "join_semi", "join_anti",
-    "join_broadcast", "join_theta_range", "join_asof_nearest",
-    "join_xmatch_radius_knn", "join_cross", "win_row_number",
-    "win_rank_dense", "win_lag_lead", "win_running_frame",
-    "win_range_frame", "win_ntile_percent", "win_first_last",
-    "sort_multi",
-]
-
-
-# The 50 ops recorded by the round-9 driver run (all green — the
-# exact key list of CORRECTNESS_r09.json). NOTE: rounds 9 and 10
-# were appended to _LEDGER_HISTORY late (round 11) — the round-10
-# VERDICT flagged that the rotation head had gone stale because the
-# recorded rows never fed back into the ordering.
-_R9_LEDGER = [
-    "llm_dedup_simhash_clusters", "mm_decode_video",
-    "udaf_grouped_agg", "llm_dedup_embcos_exact",
-    "cluster_fof_exact", "agg_gini", "llm_dedup_simhash",
-    "llm_dedup_minhash_md5", "llm_dedup_cluster", "topk_agg",
-    "limit_offset", "set_union_all", "set_union_distinct",
-    "set_intersect", "set_except", "set_except_all", "fn_string",
-    "fn_string_split", "fn_date", "fn_math", "fn_conditional",
-    "fn_cast", "fn_array", "fn_array_explode", "fn_json", "fn_map",
-    "fn_bitwise", "udf_scalar_vectorized", "udtf_flatmap",
-    "llm_dedup_exact", "llm_dedup_keep_first", "llm_fingerprint",
-    "llm_sample_hash", "llm_simsearch_knn", "llm_text_stats",
-    "llm_quality_score", "llm_token_count", "llm_tfidf_topterms",
-    "llm_multimodal_join", "mm_binary_features", "stream_tumbling",
-    "stream_sliding", "stream_session", "stream_custom_state",
-    "join_asof_zoned", "xmatch_consume", "join_skew_salted",
-    "join_asof_margin", "mm_decode", "mm_resize",
-]
-
-
-# The 50 ops recorded by the round-10 driver run (all green — the
-# exact key list of CORRECTNESS_r10.json): the 11 round-10 new ops
-# plus the (then-stale, see _R9_LEDGER note) rotation head.
-_R10_LEDGER = [
-    "llm_dedup_simhash_clusters", "mm_decode_gif",
-    "mm_decode_video", "mm_decode_video_raw",
-    "sink_density_adaptive", "source_fits_image", "source_fits_wcs",
-    "pipeline_survey_ingest", "sink_table_log", "source_fits_rice",
-    "source_fits_rice_cutout", "udaf_grouped_agg",
-    "llm_dedup_embcos_exact", "cluster_fof_exact", "agg_gini",
-    "llm_dedup_simhash", "llm_dedup_minhash_md5",
-    "llm_dedup_cluster", "topk_agg", "limit_offset",
-    "set_union_all", "set_union_distinct", "set_intersect",
-    "set_except", "set_except_all", "fn_string", "fn_string_split",
-    "fn_date", "fn_math", "fn_conditional", "fn_cast", "fn_array",
-    "fn_array_explode", "fn_json", "fn_map", "fn_bitwise",
-    "udf_scalar_vectorized", "udtf_flatmap", "llm_dedup_exact",
-    "llm_dedup_keep_first", "llm_fingerprint", "llm_sample_hash",
-    "llm_simsearch_knn", "llm_text_stats", "llm_quality_score",
-    "llm_token_count", "llm_tfidf_topterms", "llm_multimodal_join",
-    "mm_binary_features", "stream_tumbling",
-]
-
-
-# Ops whose PHYSICAL PLAN (or oracle) changed in round 8 — kept for
-# the ledger history comment trail; superseded by _R9_TOUCHED below.
-_R8_TOUCHED: list[str] = [
-    # round-7 ADVICE fixes: exact-integer Gini closing division,
-    # quantize-first ACF/embed-stats moments, CSV-writer-quoted
-    # malformed export, CDC same-seq op tiebreak
-    "agg_gini",
-    "agg_autocorr",
-    "llm_embed_stats",
-    "merge_cdc_apply",
-    "source_csv_malformed",
-    # round-7 VERDICT #1: multi-scan plans killed via ckpt_shared —
-    # every consumer of the shared embcos edge set / ngram postings
-    # has a new physical plan and needs a fresh driver row
-    "llm_dedup_ngram",
-    "llm_dedup_containment",
-    "llm_pipeline_mm",
-    "graph_degree_hist",
-    "llm_dedup_embcos",
-    "graph_pagerank",
-    "graph_triangle_count",
-    "llm_dedup_keep_best",
-    "cluster_fof",
-    # round-7 VERDICT #3/#4: MinHash chain restructure (slim band
-    # join + shared checkpointed signature/hit frames)
-    "llm_dedup_minhash_md5",
-    "llm_dedup_cluster",
-    # round-8 plan-audit follow-up: same ckpt_shared fix (10 scans)
-    "llm_dedup_edit",
-    # round-8 plan-audit follow-up: two EXCEPTs -> one presence-flag
-    # aggregate (7 scans -> 3, one shuffle)
-    "snapshot_diff",
-    # same decomposition: two anti joins -> one flag aggregate
-    # (4 scans, 4 shuffles -> 1 scan, 1 shuffle)
-    "set_symmetric_diff",
-    # round-8 stress-split finding: collapse-identical-first applied
-    # to the remaining quadratic-in-duplicates text dedups (simhash
-    # was 881 s Spark-side at the 10x dir; containment 158 s)
-    "llm_dedup_simhash",
-    # union-of-d-groupBys -> one explode + (i, col) aggregate
-    # (5 corpus scans -> 2)
-    "agg_count_min_sketch",
-]
-
-
-# Ops whose PHYSICAL PLAN (or oracle) changed in round 9 — kept for
-# the ledger history comment trail; superseded by _R11_TOUCHED below.
-_R9_TOUCHED: list[str] = [
-    # round-8 VERDICT #2: per-group applyInPandas (15k kernel calls)
-    # -> repartition(key) + one vectorized mapInPandas groupby per
-    # partition (30.8 s -> ~2 s at sf0.1)
-    "udaf_grouped_agg",
-    # round-8 VERDICT #3: exact all-pairs recall baselines —
-    # repartitioned streamed side + norm-precompute (182.9 s ->
-    # 6.2 s and 65.2 s -> 12.2 s at sf0.1)
-    "llm_dedup_embcos_exact",
-    "cluster_fof_exact",
-    # round-8 ADVICE #4: gini overflow now raises (coalesce +
-    # raise_error in the closing expression) instead of NULLing
-    "agg_gini",
-    # round-8 ADVICE #2: routing probe is exact countDistinct now —
-    # plan-shape reproducibility for the routed dedup ops
-    "llm_dedup_simhash",
-    "llm_dedup_minhash_md5",
-    "llm_dedup_cluster",
-]
-
-
-# Ops whose PHYSICAL PLAN (or kernel code) changed in rounds 10-11
-# and whose newest driver row therefore predates the current code
-# (round-10 VERDICT "What's wrong" #2: the round-10 rewrites of
-# win_ntile_percent and cluster_fof were omitted from the touched
-# ledger, so the r10 driver sample never re-hashed the new plans).
-_R11_TOUCHED: list[str] = [
-    # round-10 rewrites, driver-unverified (their latest pass is the
-    # r8 OLD plans): two-pass range-bucketed ntile; fused union-find
-    # contraction FoF
-    "win_ntile_percent",
-    "cluster_fof",
-    # round-11 ADVICE: RICE decoder fixes (runaway-unary bound,
-    # ZNAMEn resolution, exact-end pad-bit check) change the decode
-    # kernel shipped inside these ops
-    "source_fits_rice",
-    "source_fits_rice_cutout",
-    "pipeline_survey_ingest",
-    # round-11 VERDICT #4: healpix projection family rekeyed through
-    # healpix_bound's column binding (ring 9.7->2.25 s, nest
-    # 14.7->2.2 s at the 100x sky dir); adaptive ops additionally
-    # derive c8 = c16 // 4 instead of a second nest expression
-    "fn_healpix_key",
-    "fn_healpix_nest",
-    "agg_sky_coverage",
-    "agg_density_adaptive",
-    "sink_density_adaptive",
-    # round-11 10x-sweep finding: CPU-bound decode kernels ran on ONE
-    # input partition (mm_decode_video 309 s serial) — sizing.spread
-    # repartitions to core count ahead of the kernel (plan change)
-    "mm_decode",
-    "mm_resize",
-    "mm_decode_png",
-    "mm_decode_gif",
-    "mm_decode_jpeg",
-    "mm_phash_dedup",
-    "mm_decode_video",
-]
-
-
-# Ops whose PHYSICAL PLAN (or kernel/log format code) changed in
-# round 12 — kept for the ledger history comment trail; superseded
-# by _R13_TOUCHED below (all 12 were re-hash-verified by the r12
-# driver run, see _R12_LEDGER).
-_R12_TOUCHED: list[str] = [
-    "cluster_fof_2d", "cluster_fof_2d_super", "agg_object_coadd",
-    "cluster_fof", "cluster_fof_exact", "llm_dedup_keep_best",
-    "llm_dedup_cluster", "llm_dedup_simhash_clusters",
-    "sink_table_log", "sink_table_log_checkpoint",
-    "sink_table_log_vacuum", "sink_table_log_compact",
-]
-
-
-# Ops whose PHYSICAL PLAN (or kernel/log format code) changed in
-# round 13 — kept for the ledger history comment trail; superseded
-# by _R14_TOUCHED below (re-verified by the r13 driver run, see
-# _R13_LEDGER — except the six gaps carried into _R14_TOUCHED).
-_R13_TOUCHED: list[str] = [
-    # round-13 ADVICE: min_label_fixpoint's probe-converged/quotient
-    # paths now register their DISK_ONLY contraction cache for
-    # deferred release (was pinned until DataFrame GC)
-    "cluster_fof",
-    "cluster_fof_exact",
-    "cluster_fof_2d",
-    "cluster_fof_2d_super",
-    "agg_object_coadd",
-    "llm_dedup_keep_best",
-    "llm_dedup_cluster",
-    "llm_dedup_simhash_clusters",
-    # round-13 ADVICE: llm_bpe_apply gained the oracle-aligning
-    # non-empty-word filter + merge-table completeness guard
-    "llm_bpe_apply",
-    # round-13 table-log: compact() harvests footer stats for its
-    # consolidated output + bounded retry; vacuum's marker pass is
-    # now subtree-aware (partitioned compaction output kept intact)
-    "sink_table_log_compact",
-    "sink_table_log_compact_zorder",
-    "sink_table_log_vacuum",
-    # round-13: string-column data skipping (bounded-prefix UTF-8
-    # footer stats) extends the skipping probe op
-    "sink_table_log_skipping",
-    # round-13 delete/merge: the `removes` (data-change) entry kind
-    # threads through _apply_entry/_log_state/try_commit — the log
-    # walk every table-log op plans with
-    "sink_table_log",
-    "sink_table_log_checkpoint",
-    "stream_table_log_sink",
-    # round-13 OPTIMIZATION round: plan restructures (results pinned
-    # identical by tests + fresh driver_sim oracle runs, but the
-    # driver should re-hash against the new physical plans) —
-    # tile-contraction FoF + seed_complete + quotient map-literal
-    # (cluster_fof_2d / _super / agg_object_coadd), fold-exact numpy
-    # all-pairs kernel (cluster_fof_exact), edges-collect fast path
-    # (cluster_fof, llm_dedup_cluster, llm_dedup_simhash_clusters,
-    # llm_dedup_keep_best — already listed above), spread signature
-    # pass (llm_dedup_minhash_md5, llm_dedup_near), streaming state
-    # partition sizing (the _run_stream family below)
-    "llm_dedup_minhash_md5",
-    "llm_dedup_near",
-    "stream_watermark_late",
-    "stream_dedup",
-    "stream_stateful_count",
-    "stream_custom_state",
-    "stream_stream_join",
-    "stream_session_real",
-    "stream_xmatch_sphere",
-    "stream_topk_windowed",
-    "stream_parquet_sink",
-    "stream_foreach_sink",
-    "stream_static_join",
-]
-
-
-# Ops whose PHYSICAL PLAN (or kernel code) changed in round 14 —
-# their newest driver row predates the current code — PLUS the six
-# round-13 plan-changed ops that missed _R13_TOUCHED (round-13
-# VERDICT "What's wrong" #1: commits eedeaef/faed153 landed after
-# the touched-list commit, so the driver's rotation never
-# prioritized their NEW plans; knn_ivf was re-hashed green by
-# rotation luck but the ratchet should not rely on that).
-# _ROWS_ONLY_BY_DESIGN ops are filtered out at use sites (round-13
-# VERDICT #2: llm_dedup_near burned a capped ledger slot on a row
-# that can only ever read no_oracle).
-_R14_TOUCHED: list[str] = [
+# Ops whose physical plan (or kernel code) changed after their newest
+# driver row, so that row no longer witnesses the current code. Each
+# round edits this one list: add the ops it changes, drop the ones the
+# driver has re-recorded since.
+_TOUCHED: list[str] = [
     # round-13 gaps: SemDedup pair-refine kernel + Lloyd-round
     # shuffle slim (eedeaef), density layout write + listing (faed153)
     "llm_dedup_semantic",
@@ -680,92 +261,10 @@ _R14_TOUCHED: list[str] = [
 ]
 
 
-# The 50 ops recorded by the round-13 driver run (the exact key list
-# of CORRECTNESS_r13.json — 49 hash-green plus the rows-only-by-design
-# llm_dedup_near, whose row can only ever read no_oracle): the 5
-# round-13 additions, the _R13_TOUCHED re-verification, and the
-# rotation head.
-_R13_LEDGER = [
-    "sink_table_log_changes", "stream_table_log_source",
-    "sink_table_log_delete", "sink_table_log_merge",
-    "source_fits_hcompress", "cluster_fof", "cluster_fof_exact",
-    "cluster_fof_2d", "cluster_fof_2d_super", "agg_object_coadd",
-    "llm_dedup_keep_best", "llm_dedup_cluster",
-    "llm_dedup_simhash_clusters", "llm_bpe_apply",
-    "sink_table_log_compact", "sink_table_log_compact_zorder",
-    "sink_table_log_vacuum", "sink_table_log_skipping",
-    "sink_table_log", "sink_table_log_checkpoint",
-    "stream_table_log_sink", "llm_dedup_minhash_md5", "llm_dedup_near",
-    "stream_watermark_late", "stream_dedup", "stream_stateful_count",
-    "stream_custom_state", "stream_stream_join", "stream_session_real",
-    "stream_xmatch_sphere", "stream_topk_windowed",
-    "stream_parquet_sink", "stream_foreach_sink", "stream_static_join",
-    "sink_output_formats", "knn_ivf", "knn_lsh", "llm_lang_id",
-    "sink_bucketed", "source_schema_evolution", "sink_snapshot",
-    "win_streak", "win_sessionize", "llm_ngram_freq", "llm_oov_rate",
-    "merge_scd2", "fn_fits_keyword", "llm_mix_temperature",
-    "filter_region_cone", "filter_region_poly",
-]
-
-
-# The 50 ops recorded by the round-12 driver run (all green — the
-# exact key list of CORRECTNESS_r12.json): the 6 round-12 additions,
-# the full _R12_TOUCHED re-verification, and the rotation head.
-_R12_LEDGER = [
-    "llm_bpe_apply", "source_fits_wcs_arc", "source_fits_wcs_zea",
-    "sink_table_log_skipping", "stream_table_log_sink",
-    "sink_table_log_compact_zorder", "cluster_fof_2d",
-    "cluster_fof_2d_super", "agg_object_coadd", "cluster_fof",
-    "cluster_fof_exact", "llm_dedup_keep_best", "llm_dedup_cluster",
-    "llm_dedup_simhash_clusters", "sink_table_log",
-    "sink_table_log_checkpoint", "sink_table_log_vacuum",
-    "sink_table_log_compact", "llm_mix_sources", "llm_pack_sequences",
-    "llm_repetition_score", "llm_sample_stratified",
-    "llm_unigram_logprob", "llm_winnowing", "merge_upsert",
-    "profile_table", "set_intersect_all", "sink_compact",
-    "source_fits_datasource", "source_fits_import",
-    "stream_foreach_sink", "stream_session_real", "stream_static_join",
-    "stream_stream_join", "win_cume_dist", "win_rolling_median",
-    "xmatch_2d_count", "join_xmatch_sphere", "join_xmatch_sphere_knn",
-    "join_xmatch_sphere_margin", "xmatch_sphere_count",
-    "agg_density_sphere", "agg_phase_fold", "agg_period_search",
-    "llm_cluster_assign", "mm_decode_wav", "source_fits_scaled",
-    "sink_fits", "source_text_import", "sink_into",
-]
-
-
-# The 50 ops recorded by the round-11 driver run (all green — the
-# exact key list of CORRECTNESS_r11.json): the 10 round-11 additions,
-# the full _R11_TOUCHED re-verification, and the rotation head.
-_R11_LEDGER = [
-    "mm_decode_video_ip", "source_schema_rename", "source_schema_drop",
-    "source_schema_widen", "source_fits_wcs_sin", "source_fits_wcs_sip",
-    "sink_table_log_checkpoint", "sink_table_log_vacuum",
-    "sink_table_log_compact", "source_fits_gzip", "win_ntile_percent",
-    "cluster_fof", "source_fits_rice", "source_fits_rice_cutout",
-    "pipeline_survey_ingest", "fn_healpix_key", "fn_healpix_nest",
-    "agg_sky_coverage", "agg_density_adaptive", "sink_density_adaptive",
-    "mm_decode", "mm_resize", "mm_decode_png", "mm_decode_gif",
-    "mm_decode_jpeg", "mm_phash_dedup", "mm_decode_video",
-    "mm_frame_sample", "agg_cube", "agg_density_multilevel",
-    "agg_filtered", "agg_funnel_conversion", "agg_lightcurve_stats",
-    "agg_path_sequences", "agg_retention_cohorts",
-    "filter_scalar_subquery", "fn_anonymize", "fn_morton_key",
-    "fn_unpivot", "fn_vector_math", "join_asof_union_window",
-    "join_full_outer", "join_interval_overlap", "join_xmatch_2d",
-    "join_xmatch_2d_knn", "join_xmatch_2d_margin", "knn_ivf_kmeans",
-    "llm_bm25_score", "llm_char_entropy", "llm_decontaminate",
-]
-
-
-# (round, exact recorded key list) — r05 re-recorded the r04 window
-# verbatim, so _R4_LEDGER carries freshness 5, not 4.
-_LEDGER_HISTORY = [
-    (1, _R1_LEDGER), (2, _R2_LEDGER), (3, _R3_LEDGER),
-    (5, _R4_LEDGER), (6, _R6_LEDGER), (7, _R7_LEDGER),
-    (8, _R8_LEDGER), (9, _R9_LEDGER), (10, _R10_LEDGER),
-    (11, _R11_LEDGER), (12, _R12_LEDGER), (13, _R13_LEDGER),
-]
+def _touched() -> list[str]:
+    """The registered _TOUCHED ops, minus rows-only ones: their re-hash
+    slot can only ever record no_oracle."""
+    return [k for k in _TOUCHED if k in QUERIES and k not in ROWS_ONLY]
 
 
 def _latest_confirmed() -> dict[str, int]:
@@ -778,19 +277,18 @@ def _latest_confirmed() -> dict[str, int]:
 
 
 def _refresh_rotation() -> list[str]:
-    """Ledger rotation (round-4/5 VERDICT #1): every op's LATEST
-    driver confirmation should stay fresh. Order already-recorded
-    ops stalest-first — by newest-confirmation round ascending,
-    stable within a round by that round's recording order. The
-    driver's ~50-row cap takes new-op tier 1 plus the head of this
-    rotation; the tail cycles back in the following round."""
+    """Every op's LATEST driver confirmation should stay fresh. Order
+    already-recorded ops stalest-first — by newest-confirmation round
+    ascending, stable within a round by that round's recording order.
+    The driver's 50-row cap takes tiers 1-2 plus the head of this
+    rotation; the tail cycles back in the following round. Rows-only
+    ops are left out: they never upgrade past a no_oracle row."""
     latest = _latest_confirmed()
     out: list[str] = []
     seen: set[str] = set()
     for rnd, lst in _LEDGER_HISTORY:  # ascending round order
         for k in lst:
-            if (latest[k] == rnd and k not in seen
-                    and k not in _ROWS_ONLY_BY_DESIGN):
+            if latest[k] == rnd and k not in seen and k not in ROWS_ONLY:
                 seen.add(k)
                 out.append(k)
     return out
@@ -799,20 +297,14 @@ def _refresh_rotation() -> list[str]:
 def _reorder_for_ledger() -> None:
     """Three tiers: (1) ops with no driver-recorded row in any prior
     round's CORRECTNESS ledger (i.e., new this round), (2) ops whose
-    plan changed this round (_R13_TOUCHED — their old green rows no
-    longer witness the current code), (3) the refresh rotation —
-    every already-recorded op ordered oldest-confirmation-first (its
-    tail is by construction the freshest-recorded ids) — so a capped
-    driver run covers new ops, re-verifies changed ones, and
-    re-confirms stale ones, in that order."""
+    plan changed since their newest row (_TOUCHED), (3) the refresh
+    rotation — every already-recorded op ordered
+    oldest-confirmation-first — so a capped driver run covers new ops,
+    re-verifies changed ones, and re-confirms stale ones, in that
+    order."""
     all_recorded = set(_latest_confirmed())
     tier1 = [k for k in QUERIES if k not in all_recorded]
-    # rows-only-by-design ops are filtered here too (round-13 VERDICT
-    # #2): their re-hash slot can only ever record no_oracle
-    tier2 = [
-        k for k in _R14_TOUCHED
-        if k in QUERIES and k not in _ROWS_ONLY_BY_DESIGN
-    ]
+    tier2 = _touched()
     seen = set(tier1) | set(tier2)
     tier3 = [k for k in _refresh_rotation()
              if k in QUERIES and k not in seen]
@@ -825,12 +317,12 @@ def _reorder_for_ledger() -> None:
 
 
 def freshness_report() -> dict[str, Any]:
-    """Machine-readable ledger staleness (round-7 VERDICT #7): for
-    every registered op, the newest round with a driver-recorded
-    green CORRECTNESS row, plus the aggregate histogram and the
-    current refresh-rotation head — so the driver (and the judge)
-    can see which ops' evidence is stale without re-deriving the
-    rotation by hand. bench.py emits this next to the bench line."""
+    """Machine-readable ledger staleness: for every registered op, the
+    newest round with a driver-recorded green CORRECTNESS row, plus the
+    aggregate histogram and the current refresh-rotation head — so the
+    driver (and the judge) can see which ops' evidence is stale without
+    re-deriving the rotation by hand. bench.py emits this next to the
+    bench line."""
     load_all()
     latest = _latest_confirmed()
     by_round: dict[str, int] = {}
@@ -842,10 +334,7 @@ def freshness_report() -> dict[str, Any]:
         "n_ops": len(QUERIES),
         "never_recorded": sorted(k for k in QUERIES if k not in latest),
         "latest_round_histogram": dict(sorted(by_round.items())),
-        "touched_this_round": [
-            k for k in _R14_TOUCHED
-            if k in QUERIES and k not in _ROWS_ONLY_BY_DESIGN
-        ],
+        "touched_this_round": _touched(),
         "rotation_head": rotation[:50],
         "rotation_len": len(rotation),
         "latest_by_op": {k: latest.get(k, 0) for k in QUERIES},

@@ -25,7 +25,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF01 = "/root/testdata/sf0.01"
 if "--sf" in sys.argv:

@@ -2,10 +2,9 @@
 times each REAL stage of the round-13 chain (collapse routing,
 spread signatures, edges-collect fixpoint) under bench.py's session
 settings, with the same per-run cache reset the bench applies, plus
-a Spark job count per stage. Replaces the stale stage labels of
-scripts/profile_minhash.py (pre-r13: its "sig build" bypassed both
-the collapse routing and the repartition spread). Not part of the
-driver contract.
+a Spark job count per stage. Replaces the pre-r13 profiler, whose
+"sig build" stage bypassed both the collapse routing and the
+repartition spread. Not part of the driver contract.
 
 Usage: python scripts/profile_minhash_r14.py
 """

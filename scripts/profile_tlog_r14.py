@@ -1,6 +1,6 @@
 """Profile the table-log family: wall time + Spark job count per op."""
 import json, os, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 os.environ.setdefault("LSD_SHUFFLE_PARTITIONS", "8")

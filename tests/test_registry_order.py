@@ -10,11 +10,11 @@ from __future__ import annotations
 
 from lsd_spark.registry import (
     _LEDGER_HISTORY,
-    _R14_TOUCHED,
-    _ROWS_ONLY_BY_DESIGN,
     _latest_confirmed,
     _refresh_rotation,
+    _touched,
     QUERIES,
+    ROWS_ONLY,
     load_all,
 )
 
@@ -37,8 +37,7 @@ def test_tier2_is_touched_then_rotation():
     newest-confirmation first) minus the touched set."""
     names = list(QUERIES)
     n_new = sum(1 for k in names if k not in _ALL_RECORDED)
-    touched = [k for k in _R14_TOUCHED
-               if k in QUERIES and k not in _ROWS_ONLY_BY_DESIGN]
+    touched = _touched()
     assert names[n_new:n_new + len(touched)] == touched
     rotation = [k for k in _refresh_rotation()
                 if k in QUERIES and k not in set(touched)]
@@ -64,8 +63,7 @@ def test_r09_window_covers_new_touched_and_stale():
     window = set(names)
     n_new = sum(1 for k in QUERIES if k not in _ALL_RECORDED)
     assert all(k in window for k in QUERIES if k not in _ALL_RECORDED)
-    touched = [k for k in _R14_TOUCHED
-               if k in QUERIES and k not in _ROWS_ONLY_BY_DESIGN]
+    touched = _touched()
     n_touched_fit = min(len(touched), max(0, 50 - n_new))
     assert all(k in window for k in touched[:n_touched_fit])
     rotation = [k for k in _refresh_rotation()
@@ -86,18 +84,16 @@ def test_new_ops_fit_driver_cap():
 
 
 def test_ledger_history_is_ascending_and_covers_all_queries():
+    # one entry per recorded round, ascending, no gap: a missing or
+    # misnumbered ledger would silently reshuffle the rotation
     rounds = [r for r, _ in _LEDGER_HISTORY]
-    assert rounds == sorted(rounds)
-    # every previously-registered op has at least one driver row;
-    # only this round's additions may be missing.
-    missing = [k for k in QUERIES if k not in _ALL_RECORDED]
-    assert len(missing) == len(set(missing))
+    assert rounds == list(range(1, 14))
 
 
 def test_rotation_excludes_rows_only_ops():
     """agg_approx_distinct / llm_dedup_near can never upgrade past a
     `no_oracle` row — queueing them wastes capped slots."""
-    assert not (_ROWS_ONLY_BY_DESIGN & set(_refresh_rotation()))
+    assert not (ROWS_ONLY & set(_refresh_rotation()))
 
 
 def test_committed_freshness_matches_live_registry():
@@ -108,6 +104,8 @@ def test_committed_freshness_matches_live_registry():
     import json
     from pathlib import Path
 
+    from lsd_spark.registry import freshness_report
+
     p = Path(__file__).resolve().parent.parent / "FRESHNESS.json"
     committed = json.loads(p.read_text())
     assert committed["n_ops"] == len(QUERIES), (
@@ -115,9 +113,9 @@ def test_committed_freshness_matches_live_registry():
         f"{len(QUERIES)} — re-run bench.py (or freshness_report()) "
         "before committing"
     )
-    live_touched = [k for k in _R14_TOUCHED
-                    if k in QUERIES and k not in _ROWS_ONLY_BY_DESIGN]
-    assert committed["touched_this_round"] == live_touched
+    # the whole report — per-op freshness, rotation head, histogram,
+    # never-recorded set — guards the ledger-history derivation
+    assert committed == freshness_report()
 
 
 def test_every_query_has_oracle_or_documented_reason():

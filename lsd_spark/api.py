@@ -436,7 +436,8 @@ class DB:
         against this DB's tables — the programmatic face of the
         lsd-xmatch / lsd-footprint / make-object-catalog tool set:
         `db.op("join_xmatch_2d")`, `db.op("llm_decontaminate")`,
-        `db.op("cluster_fof")`, ..."""
+        `db.op("cluster_fof")`, ... Rows come back unordered; sort
+        the returned frame where order matters."""
         from lsd_spark.registry import QUERIES, load_all
 
         load_all()

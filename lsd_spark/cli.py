@@ -16,6 +16,7 @@ results. Kept import-light so `--help` works without a JVM.
 from __future__ import annotations
 
 import argparse
+import functools
 import os
 import sys
 
@@ -78,37 +79,16 @@ def cmd_xmatch(args, spark=None):
     print(f"xmatch table -> {path}")
 
 
-def cmd_footprint(args, spark=None):
+def _emit_op(op: str, args, spark=None):
+    """Run registry op `op` over --db and emit it. Ops return
+    unordered rows; the terminal is where a person reads them, so
+    printed rows are ordered by every output column. --out files are
+    written unsorted."""
     from lsd_spark.registry import QUERIES, load_all
 
     load_all()
-    _emit(QUERIES["agg_density_map_2d"](_spark(args, spark), args.db), args.format, args.out)
-
-
-def cmd_xmatch2d(args, spark=None):
-    from lsd_spark.registry import QUERIES, load_all
-
-    load_all()
-    _emit(QUERIES["join_xmatch_2d"](_spark(args, spark), args.db), args.format, args.out)
-
-
-def cmd_decontaminate(args, spark=None):
-    from lsd_spark.registry import QUERIES, load_all
-
-    load_all()
-    _emit(QUERIES["llm_decontaminate"](_spark(args, spark), args.db), args.format, args.out)
-
-
-def cmd_make_object_catalog(args, spark=None):
-    from lsd_spark.registry import QUERIES, load_all
-
-    load_all()
-    df = QUERIES["cluster_fof"](_spark(args, spark), args.db)
-    if args.out:
-        df.write.mode("overwrite").parquet(args.out)
-        print(f"object catalog -> {args.out}")
-    else:
-        _emit(df, "csv", None)
+    df = QUERIES[op](_spark(args, spark), args.db)
+    _emit(df if args.out else df.orderBy(*df.columns), args.format, args.out)
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -148,26 +128,26 @@ def build_parser() -> argparse.ArgumentParser:
     f.add_argument("--db", default=os.environ.get("LSD_DB", "/root/testdata/sf0.01"))
     f.add_argument("--format", choices=["csv", "json", "parquet"], default="csv")
     f.add_argument("--out", default=None)
-    f.set_defaults(fn=cmd_footprint)
+    f.set_defaults(fn=functools.partial(_emit_op, "agg_density_map_2d"))
 
     x2 = sub.add_parser("xmatch2d", help="2-D spatial nearest-neighbor cross-match")
     x2.add_argument("--db", default=os.environ.get("LSD_DB", "/root/testdata/sf0.01"))
     x2.add_argument("--format", choices=["csv", "json", "parquet"], default="csv")
     x2.add_argument("--out", default=None)
-    x2.set_defaults(fn=cmd_xmatch2d)
+    x2.set_defaults(fn=functools.partial(_emit_op, "join_xmatch_2d"))
 
     dc = sub.add_parser("decontaminate", help="train/test shingle-overlap check")
     dc.add_argument("--db", default=os.environ.get("LSD_DB", "/root/testdata/sf0.01"))
     dc.add_argument("--format", choices=["csv", "json", "parquet"], default="csv")
     dc.add_argument("--out", default=None)
-    dc.set_defaults(fn=cmd_decontaminate)
+    dc.set_defaults(fn=functools.partial(_emit_op, "llm_decontaminate"))
 
     m = sub.add_parser(
         "make-object-catalog", help="FoF clustering build (lsd-make-object-catalog)"
     )
     m.add_argument("--db", default=os.environ.get("LSD_DB", "/root/testdata/sf0.01"))
     m.add_argument("--out", default=None)
-    m.set_defaults(fn=cmd_make_object_catalog)
+    m.set_defaults(fn=functools.partial(_emit_op, "cluster_fof"), format="parquet")
     return p
 
 

@@ -101,7 +101,7 @@ def fn_equgal(spark, sf_dir):
         "event_id",
         F.round(F.expr(_L_SQL), 6).alias("gal_l"),
         F.round(F.expr(_B_SQL), 6).alias("gal_b"),
-    ).orderBy("event_id")
+    )
 
 
 @register(
@@ -121,13 +121,13 @@ def fn_galequ(spark, sf_dir):
     rotation); tests/test_region.py pins the analytic inverse
     property galequ(equgal(ra, dec)) == (ra, dec) to 1e-6 deg.
     Identical expression text runs in the DuckDB oracle; map-only,
-    whole-stage codegen, no shuffle beyond the presentation sort."""
+    whole-stage codegen, no shuffle."""
     pts = sphere_points(spark, sf_dir, None)
     return pts.select(
         "event_id",
         F.round(F.expr(_RA_EQ_SQL), 6).alias("eq_ra"),
         F.round(F.expr(_DEC_EQ_SQL), 6).alias("eq_dec"),
-    ).orderBy("event_id")
+    )
 
 
 # --- proper motion: per-object linear fit over the detection history ------
@@ -180,7 +180,6 @@ def agg_proper_motion(spark, sf_dir):
             .alias("pm_dec_q"),
         )
         .filter(F.col("n_det") >= 3)
-        .orderBy("user_id")
     )
 
 
@@ -229,13 +228,13 @@ def fn_sexagesimal(spark, sf_dir):
     '±DD:MM:SS.mm') — the catalog-output convention every LSD query
     report uses [lsd:src/lsd/query_parser.py function namespace —
     UNVERIFIED]. Identical expression text both engines; map-only,
-    whole-stage codegen, no shuffle beyond the presentation sort."""
+    whole-stage codegen, no shuffle."""
     pts = sphere_points(spark, sf_dir, None)
     return pts.select(
         "event_id",
         F.expr(_RA_HMS).alias("ra_hms"),
         F.expr(_DEC_DMS).alias("dec_dms"),
-    ).orderBy("event_id")
+    )
 
 
 # --- sky coverage: occupied-HEALPix summary of a catalog ------------------
@@ -340,7 +339,7 @@ def fn_mjd_convert(spark, sf_dir):
         .cast("long")
         .alias("mjd_x1e5"),
         F.when(back == F.col("ts"), 1).otherwise(0).cast("int").alias("roundtrip_ok"),
-    ).orderBy("event_id")
+    )
 
 
 # --- sky dipole moment ------------------------------------------------------
@@ -469,5 +468,4 @@ def agg_galactic_profile(spark, sf_dir):
         )
         .groupBy("b_bin")
         .agg(F.count("*").cast("long").alias("cnt"))
-        .orderBy("b_bin")
     )

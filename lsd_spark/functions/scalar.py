@@ -59,7 +59,6 @@ def fn_string_split(spark, sf_dir):
         p.select(F.split("p_type", " ").getItem(0).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").alias("cnt"))
-        .orderBy("tok")
     )
 
 
@@ -85,7 +84,6 @@ def fn_date(spark, sf_dir):
             .cast("int")
             .alias("min_days"),
         )
-        .orderBy("y", "m")
     )
 
 
@@ -110,7 +108,6 @@ def fn_math(spark, sf_dir):
             F.sum(F.col("o_orderkey") % 7).cast("long").alias("mod_sum"),
             F.count("*").alias("cnt"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -135,7 +132,6 @@ def fn_conditional(spark, sf_dir):
     return (
         o.groupBy(band.alias("band"), soo.alias("status_or_open"))
         .agg(F.count("*").alias("cnt"))
-        .orderBy("band", "status_or_open")
     )
 
 
@@ -161,7 +157,6 @@ def fn_cast(spark, sf_dir):
             F.date_format(F.min(F.col("l_shipdate").cast("date")), "yyyy-MM-dd").alias("mn_date"),
             F.date_format(F.max(F.col("l_shipdate").cast("date")), "yyyy-MM-dd").alias("mx_date"),
         )
-        .orderBy("qi")
     )
 
 
@@ -199,7 +194,6 @@ def fn_array(spark, sf_dir):
             F.round(F.avg("vec_sum"), 4).alias("avg_vec_sum"),
             F.round(F.avg("first_el"), 6).alias("avg_first"),
         )
-        .orderBy("label")
     )
 
 
@@ -219,7 +213,6 @@ def fn_array_explode(spark, sf_dir):
         emb.filter(F.col("vec_id") < 10)
         .select("vec_id", F.posexplode(F.slice("embedding", 1, 4)).alias("pos", "v"))
         .select("vec_id", "pos", F.round(F.col("v").cast("double"), 6).alias("val"))
-        .orderBy("vec_id", "pos")
     )
 
 
@@ -244,7 +237,6 @@ def fn_json(spark, sf_dir):
             F.round(F.avg(k), 4).alias("avg_k"),
             F.max(k).alias("max_k"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -264,7 +256,6 @@ def fn_map(spark, sf_dir):
         ev.select("event_type", (m.getItem("k") * F.col("value")).alias("kv"))
         .groupBy("event_type")
         .agg(F.round(F.sum("kv"), 2).alias("weighted"))
-        .orderBy("event_type")
     )
 
 
@@ -293,7 +284,6 @@ def fn_bitwise(spark, sf_dir):
             .cast("long")
             .alias("mx_sh"),
         )
-        .orderBy("bucket")
     )
 
 
@@ -344,9 +334,7 @@ def fn_vector_math(spark, sf_dir):
     )
     s = F.expr(f"ROUND(AGGREGATE(embedding, 0D, (acc, x) -> acc + {dbl}), 6)")
     fs = F.expr("ROUND(CAST(element_at(embedding, 1) AS DOUBLE) * 2.0 + 1.0, 6)")
-    return emb.select(
-        "vec_id", l2.alias("l2"), s.alias("s"), fs.alias("first_scaled")
-    ).orderBy("vec_id")
+    return emb.select("vec_id", l2.alias("l2"), s.alias("s"), fs.alias("first_scaled"))
 
 
 @register(
@@ -374,7 +362,6 @@ def fn_anonymize(spark, sf_dir):
             F.count_distinct("event_type").alias("n_types"),
         )
         .filter(F.col("n_events") >= 5)
-        .orderBy("user_token")
     )
 
 
@@ -414,7 +401,6 @@ def fn_variant(spark, sf_dir):
             F.count("*").cast("long").alias("cnt"),
             F.min("k").cast("int").alias("min_k"),
         )
-        .orderBy("k_mod")
     )
 
 
@@ -469,7 +455,6 @@ def fn_arg_extrema(spark, sf_dir):
             .cast("long")
             .alias("max_cents"),
         )
-        .orderBy("pri")
     )
 
 
@@ -496,9 +481,9 @@ def fn_struct_nested(spark, sf_dir):
     plan, which is what the surface test needs.
 
     Plan: broadcast dim join + map-only struct pack/unpack inside
-    whole-stage codegen; zero shuffles beyond the presentation
-    sort. 100 TB: leaf-pruned nested access is free; the trap is
-    rebuilding whole structs per row in a UDF — never done here."""
+    whole-stage codegen; zero shuffles. 100 TB: leaf-pruned nested
+    access is free; the trap is rebuilding whole structs per row in
+    a UDF — never done here."""
     n = load(spark, sf_dir, "nation")
     r = load(spark, sf_dir, "region")
     s = n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey).select(
@@ -512,4 +497,4 @@ def fn_struct_nested(spark, sf_dir):
         F.col("info.name").alias("nation_name"),
         F.upper(F.col("info.region")).alias("region_uc"),
         F.length(F.col("info.name")).alias("name_len"),
-    ).orderBy("n_nationkey")
+    )

@@ -250,7 +250,6 @@ def llm_dedup_near(spark, sf_dir):
         cand.withColumn("jaccard", F.round(jac.cast("double"), 4))
         .filter(F.col("jaccard") >= JACCARD_T)
         .select("doc_a", "doc_b", "jaccard")
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -354,9 +353,7 @@ def _simhash_naive(spark, sf_dir):
     single scan, fully pipelined."""
     docs = load(spark, sf_dir, "documents")
     pairs = _simhash_banded(_simhash_signatures(docs))
-    return pairs.select(
-        F.col("lo").alias("doc_a"), F.col("hi").alias("doc_b"), "hamming"
-    ).orderBy("doc_a", "doc_b")
+    return pairs.select(F.col("lo").alias("doc_a"), F.col("hi").alias("doc_b"), "hamming")
 
 
 def _simhash_collapsed(spark, sf_dir):
@@ -394,7 +391,7 @@ def _simhash_collapsed(spark, sf_dir):
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b", F.lit(0).cast("long").alias("hamming"))
     )
-    return cross.unionByName(within).orderBy("doc_a", "doc_b")
+    return cross.unionByName(within)
 
 
 @register("llm_dedup_simhash", oracle=_SIMHASH_ORACLE)
@@ -458,7 +455,6 @@ def _simhash_cluster_summary(labels):
                 ).cast("binary")
             ).alias("member_fp"),
         )
-        .orderBy("cluster_id")
     )
 
 
@@ -695,7 +691,7 @@ def llm_dedup_ngram(spark, sf_dir):
         .join(gjac, "g")
         .select(F.col("va").alias("doc_a"), F.col("vb").alias("doc_b"), "jaccard")
     )
-    return cross.unionByName(within).orderBy("doc_a", "doc_b")
+    return cross.unionByName(within)
 
 
 CONTAIN_T = 0.8
@@ -839,7 +835,7 @@ def _containment_collapsed(spark, sf_dir):
             F.round(F.lit(1.0), 4).cast("double").alias("containment"),
         )
     )
-    return cross.unionByName(within).orderBy("doc_a", "doc_b")
+    return cross.unionByName(within)
 
 
 # ---------------------------------------------------------------------------
@@ -1077,7 +1073,7 @@ def llm_dedup_embcos(spark, sf_dir):
     'dedup over IVF candidates', not 'pretend-exact'. Physical path:
     embcos_near_pairs' collapse-identical-first plan (bit-identical
     output, quadratic-in-duplicates candidate blowup avoided)."""
-    return embcos_near_pairs(spark, sf_dir).orderBy("vec_a", "vec_b")
+    return embcos_near_pairs(spark, sf_dir)
 
 
 @register("llm_dedup_embcos_exact", oracle=_EMBCOS_ORACLE)
@@ -1117,7 +1113,6 @@ def llm_dedup_embcos_exact(spark, sf_dir):
         .join(b, F.col("vec_a") < F.col("vec_b"))
         .select("vec_a", "vec_b", sim.alias("sim"))
         .filter(F.col("sim") >= EMBCOS_T)
-        .orderBy("vec_a", "vec_b")
     )
 
 
@@ -1163,7 +1158,6 @@ def llm_dedup_keep_first(spark, sf_dir):
         docs.select("doc_id", fp.alias("fp"))
         .join(keepers, (F.col("fp") == F.col("k_fp")) & (F.col("doc_id") == F.col("keeper")))
         .select("doc_id", "group_size")
-        .orderBy("doc_id")
     )
 
 
@@ -1187,7 +1181,6 @@ def llm_sample_hash(spark, sf_dir):
         docs.filter(h % 10 == 0)
         .groupBy("lang")
         .agg(F.count("*").alias("cnt"))
-        .orderBy("lang")
     )
 
 
@@ -1272,7 +1265,7 @@ def llm_dedup_edit(spark, sf_dir):
             F.lit(0).cast("bigint").alias("dist"),
         )
     )
-    return cross.unionByName(within).orderBy("doc_a", "doc_b")
+    return cross.unionByName(within)
 
 
 WINNOW_K = 4  # k-gram (words) per hash
@@ -1344,7 +1337,6 @@ def llm_winnowing(spark, sf_dir):
     return (
         frames.select("doc_id", m.alias("fp"), fpos.alias("fpos"))
         .distinct()
-        .orderBy("doc_id", "fpos")
     )
 
 
@@ -1426,7 +1418,6 @@ def llm_dedup_substring(spark, sf_dir):
         a.join(b, (a.fp == b.fp) & (F.col("doc_a") < F.col("doc_b")))
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("n_shared_grams"))
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -1493,7 +1484,7 @@ def llm_dedup_incremental(spark, sf_dir):
         .when(F.col("rn") > 1, F.lit("dup_batch"))
         .otherwise(F.lit("fresh"))
     )
-    return batch.select("doc_id", status.alias("status")).orderBy("doc_id")
+    return batch.select("doc_id", status.alias("status"))
 
 
 # ---------------------------------------------------------------------------
@@ -1749,7 +1740,7 @@ def llm_dedup_minhash_md5(spark, sf_dir):
     codegen; the only shuffles are the band join and the final
     dedup. Unlike llm_dedup_near (xxhash64, rows-only by design),
     every stage here is bit-exact against the DuckDB oracle."""
-    return _minhash_hits(spark, sf_dir).orderBy("doc_a", "doc_b")
+    return _minhash_hits(spark, sf_dir)
 
 
 _CLUSTER_ORACLE = (
@@ -1814,7 +1805,6 @@ def llm_dedup_cluster(spark, sf_dir):
                 ).cast("binary")
             ).alias("member_fp"),
         )
-        .orderBy("cluster_id")
     )
 
 
@@ -1898,5 +1888,4 @@ def llm_dedup_url(spark, sf_dir):
         .groupBy("canonical_url")
         .agg(F.count("*").alias("n_docs"), F.min("doc_id").cast("long").alias("keep_id"))
         .filter(F.col("n_docs") > 1)
-        .orderBy("canonical_url")
     )

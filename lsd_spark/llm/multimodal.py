@@ -191,7 +191,7 @@ def mm_decode(spark, sf_dir):
     return docs.mapInPandas(
         roundtrip_kernel,
         schema="doc_id bigint, width int, height int, channels int, px_sum bigint",
-    ).orderBy("doc_id")
+    )
 
 
 @register(
@@ -210,7 +210,6 @@ def llm_multimodal_join(spark, sf_dir):
         docs.join(emb, docs.doc_id == emb.vec_id)
         .groupBy("label")
         .agg(F.count("*").alias("n"), F.round(F.avg("n_chars"), 2).alias("avg_chars"))
-        .orderBy("label")
     )
 
 
@@ -289,7 +288,7 @@ def mm_resize(spark, sf_dir):
                 columns=["doc_id", "width", "height", "out_width", "out_height", "out_sum"],
             )
 
-    return docs.mapInPandas(resize_kernel, RESIZE_SCHEMA).orderBy("doc_id")
+    return docs.mapInPandas(resize_kernel, RESIZE_SCHEMA)
 
 
 N_FRAMES = 4
@@ -353,7 +352,6 @@ def mm_frame_sample(spark, sf_dir):
             frame_sample_kernel,
             schema="doc_id bigint, frame_idx int, frame_offset bigint, frame_rms double",
         )
-        .orderBy("doc_id", "frame_idx")
     )
 
 
@@ -872,7 +870,7 @@ def mm_decode_png(spark, sf_dir):
             )
 
     encoded = docs.mapInPandas(encode_kernel, schema="doc_id bigint, png binary")
-    return encoded.mapInPandas(decode_kernel, schema=_PNG_STATS_SCHEMA).orderBy("doc_id")
+    return encoded.mapInPandas(decode_kernel, schema=_PNG_STATS_SCHEMA)
 
 
 _MD5_BYTE_LIST = (
@@ -958,7 +956,7 @@ def mm_decode_gif(spark, sf_dir):
             "doc_id bigint, width int, height int, "
             "mean_gray double, min_gray int, max_gray int"
         ),
-    ).orderBy("doc_id")
+    )
 
 
 # digest byte k with its low bit cleared — the even gray level of
@@ -1034,7 +1032,7 @@ def mm_decode_jpeg(spark, sf_dir):
             "doc_id bigint, width int, height int, "
             "g0 int, g1 int, g2 int, g3 int"
         ),
-    ).orderBy("doc_id")
+    )
 
 
 _WAV_SQL_SAMPLE = "(CAST(('0x' || substring(md5(text), 2*k+1, 2))::INT AS DOUBLE) - 128) * 256"
@@ -1076,7 +1074,7 @@ def mm_decode_wav(spark, sf_dir):
 
     return docs.mapInPandas(
         roundtrip_kernel, schema="doc_id bigint, n_frames bigint, rate int, rms double"
-    ).orderBy("doc_id")
+    )
 
 
 PHASH_BITS = 60  # signed-BIGINT-safe, the hash60 convention
@@ -1150,7 +1148,6 @@ def mm_phash_dedup(spark, sf_dir):
         ph.groupBy("phash")
         .agg(F.count("*").alias("n_images"), F.min("doc_id").cast("long").alias("keep_id"))
         .filter(F.col("n_images") > 1)
-        .orderBy("phash")
     )
 
 
@@ -1685,7 +1682,7 @@ def mm_decode_video(spark, sf_dir):
             "doc_id bigint, n_frames int, width int, height int, "
             + ", ".join(f"s{f} int" for f in sampled)
         ),
-    ).orderBy("doc_id")
+    )
 
 
 RAW_VIDEO_N_FRAMES = 4
@@ -1755,7 +1752,7 @@ def mm_decode_video_raw(spark, sf_dir):
             "doc_id bigint, n_frames int, width int, height int, "
             "rt0 int, bb0 int, rt2 int, bb2 int"
         ),
-    ).orderBy("doc_id")
+    )
 
 
 # --- inter-coded video: MPEG-1-style I/P frames ---------------------------
@@ -2123,4 +2120,4 @@ def mm_decode_video_ip(spark, sf_dir):
             + ", ".join(f"s{t} bigint" for t in range(IPV_N_FRAMES))
             + ", sample_cost int"
         ),
-    ).orderBy("doc_id")
+    )

@@ -64,7 +64,6 @@ def llm_pack_sequences(spark, sf_dir):
             ).cast("bigint").alias("bin_id"),
             "n_tokens",
         )
-        .orderBy("doc_id")
     )
 
 
@@ -97,7 +96,6 @@ def llm_mix_sources(spark, sf_dir):
         docs.filter((h % 100) < rate)
         .groupBy("source")
         .agg(F.count("*").alias("kept"), F.first(rate).alias("target_pct"))
-        .orderBy("source")
     )
 
 
@@ -146,7 +144,6 @@ def llm_decontaminate(spark, sf_dir):
         .join(F.broadcast(test_sh), "s")
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_hits"))
-        .orderBy("doc_id")
     )
 
 
@@ -171,7 +168,7 @@ def llm_repetition_score(spark, sf_dir):
         F.size(w).cast("bigint").alias("n_words"),
         F.size(F.array_distinct(w)).cast("bigint").alias("n_distinct"),
         F.round(1.0 - F.size(F.array_distinct(w)) / F.size(w), 4).alias("rep_ratio"),
-    ).orderBy("doc_id")
+    )
 
 
 MM_QSCORE_T = 0.5
@@ -237,7 +234,6 @@ def llm_pipeline_mm(spark, sf_dir):
             F.count("*").alias("n_docs"),
             F.sum("n_tok").cast("bigint").alias("n_tokens"),
         )
-        .orderBy("lang")
     )
 
 
@@ -270,7 +266,6 @@ def llm_sample_stratified(spark, sf_dir):
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= STRATUM_N)
         .select("doc_id", "lang")
-        .orderBy("lang", "doc_id")
     )
 
 
@@ -321,7 +316,7 @@ def llm_mix_temperature(spark, sf_dir):
         F.floor(p / tot_p * tot_toks / F.col("toks") * 1000 + 0.5)
         .cast("bigint")
         .alias("epochs_mil"),
-    ).orderBy("source")
+    )
 
 
 CHUNK_LEN = 200  # chars per chunk
@@ -347,12 +342,11 @@ def llm_chunk_docs(spark, sf_dir):
     each doc explodes into CHUNK_LEN-char windows every CHUNK_STRIDE
     chars (50-char overlap), emitting the chunk index, offset,
     length, and content fingerprint. Pure generate+explode map — no
-    shuffle before the presentation sort — and the fan-out factor is
-    n_chars/stride, so output partitioning follows input
-    partitioning; at 100 TB chunking is IO-bound, exactly as it
-    should be. Fingerprint instead of raw chunk text keeps the
-    result row narrow (the pattern for auditing a chunker without
-    re-shipping the corpus)."""
+    shuffle — and the fan-out factor is n_chars/stride, so output
+    partitioning follows input partitioning; at 100 TB chunking is
+    IO-bound, exactly as it should be. Fingerprint instead of raw
+    chunk text keeps the result row narrow (the pattern for auditing
+    a chunker without re-shipping the corpus)."""
     docs = load(spark, sf_dir, "documents")
     starts = F.sequence(
         F.lit(1),
@@ -368,7 +362,7 @@ def llm_chunk_docs(spark, sf_dir):
         F.col("st").cast("long").alias("start_pos"),
         F.length("chunk").cast("long").alias("chunk_len"),
         F.md5(F.col("chunk").cast("binary")).alias("chunk_fp"),
-    ).orderBy("doc_id", "chunk_idx")
+    )
 
 
 SPLIT_TRAIN_PCT = 80
@@ -413,7 +407,6 @@ def llm_split_stratified(spark, sf_dir):
         docs.select("lang", "n_chars", split.alias("split"))
         .groupBy("lang", "split")
         .agg(F.count("*").alias("n_docs"), F.sum("n_chars").cast("long").alias("n_chars"))
-        .orderBy("lang", "split")
     )
 
 
@@ -470,5 +463,4 @@ def llm_sample_importance(spark, sf_dir):
         )
         .filter(F.col("u") < F.col("p_u"))
         .select("doc_id", "lang", F.col("p_u").cast("long").alias("weight_x1e6"))
-        .orderBy("doc_id")
     )

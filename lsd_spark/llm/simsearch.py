@@ -249,7 +249,6 @@ def ivf_search(emb, cent, nprobe: int = N_PROBE, topk: int = 5):
         .dropDuplicates(["vec_id", "neighbor_id"])
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= topk)
-        .orderBy("vec_id", "rn")
         .select("vec_id", "neighbor_id", "sim")
     )
 
@@ -472,7 +471,6 @@ def llm_cluster_assign(spark, sf_dir):
             F.floor(F.avg("n_chars") * 100 + F.lit(0.5)).cast("long").alias("avg_chars_q"),
             F.min("doc_id").alias("rep_doc"),
         )
-        .orderBy("cluster_id")
     )
 
 
@@ -710,7 +708,6 @@ def llm_dedup_semantic(spark, sf_dir):
             .otherwise(~F.coalesce(F.col("ssim") >= SEMDEDUP_T, F.lit(False)))
             .alias("kept"),
         )
-        .orderBy("vec_id")
     )
 
 
@@ -829,7 +826,6 @@ def knn_lsh(spark, sf_dir):
         )
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 5)
-        .orderBy("vec_id", "rn")
         .select("vec_id", "neighbor_id", "sim")
     )
 
@@ -891,7 +887,7 @@ def llm_embed_quantize(spark, sf_dir):
             "code_fp"
         ),
         F.round((F.col("mx") - F.col("mn")) / QUANT_LEVELS, 6).alias("scale"),
-    ).orderBy("vec_id")
+    )
 
 
 def _sq8_recon_spark(e_col):
@@ -985,7 +981,6 @@ def knn_ivf_sq8(spark, sf_dir):
         .dropDuplicates(["vec_id", "neighbor_id"])
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 5)
-        .orderBy("vec_id", "rn")
         .select("vec_id", "neighbor_id", "sim")
     )
 
@@ -1061,5 +1056,4 @@ def llm_embed_stats(spark, sf_dir):
             "n_low",
             "n_high",
         )
-        .orderBy("label")
     )

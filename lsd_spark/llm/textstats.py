@@ -30,7 +30,6 @@ def llm_text_stats(spark, sf_dir):
             F.round(F.avg("n_chars"), 2).alias("avg_chars"),
             F.countDistinct("source").alias("n_sources"),
         )
-        .orderBy("lang")
     )
 
 
@@ -171,7 +170,6 @@ def llm_lang_id(spark, sf_dir):
                 "n_correct"
             ),
         )
-        .orderBy("true_lang")
     )
 
 
@@ -223,7 +221,6 @@ def llm_pipeline_e2e(spark, sf_dir):
             F.sum(F.size(F.split("text", " "))).cast("long").alias("tokens"),
             (F.floor(F.avg("n_chars") * 100 + 0.5) / 100).alias("avg_chars"),
         )
-        .orderBy("lang")
     )
 
 
@@ -254,7 +251,6 @@ def llm_char_entropy(spark, sf_dir):
                 F.log2(F.sum("n")) - F.sum(F.col("n") * F.log2("n")) / F.sum("n"), 6
             ).alias("h")
         )
-        .orderBy("doc_id")
     )
 
 
@@ -317,7 +313,6 @@ def llm_bm25_score(spark, sf_dir):
         .agg(
             F.floor(F.sum(contrib) * 10000 + 0.5).cast("bigint").alias("score4")
         )
-        .orderBy("doc_id")
     )
 
 
@@ -352,7 +347,6 @@ def llm_unigram_logprob(spark, sf_dir):
             .cast("bigint")
             .alias("avg_lp4")
         )
-        .orderBy("doc_id")
     )
 
 
@@ -432,7 +426,6 @@ def llm_oov_rate(spark, sf_dir):
         tok.join(F.broadcast(vocab), "term", "left")
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_tokens"), rate.alias("oov_rate"))
-        .orderBy("doc_id")
     )
 
 
@@ -474,10 +467,9 @@ def llm_pii_redact(spark, sf_dir):
     counts and the md5 of the redacted text (the fingerprint proves
     the rewrite, not just the counts, survived). Pure map — two
     regexp_extract_all + two regexp_replace per row, all JVM-side,
-    zero shuffles before the final presentation sort; at 100 TB this
-    is the textbook embarrassingly-parallel scrubbing pass (the
-    regex NFA is the bottleneck, and it runs inside codegen, not in
-    Python)."""
+    zero shuffles; at 100 TB this is the textbook
+    embarrassingly-parallel scrubbing pass (the regex NFA is the
+    bottleneck, and it runs inside codegen, not in Python)."""
     docs = load(spark, sf_dir, "documents")
     dirty = F.concat(
         F.col("text"),
@@ -512,7 +504,7 @@ def llm_pii_redact(spark, sf_dir):
         .cast("long")
         .alias("n_phones"),
         F.md5(red.cast("binary")).alias("red_fp"),
-    ).orderBy("doc_id")
+    )
 
 
 # --- rule-based quality filter ---------------------------------------------
@@ -583,7 +575,7 @@ def llm_filter_rules(spark, sf_dir):
         "doc_id",
         (reason == "ok").alias("kept"),
         reason.alias("reason"),
-    ).orderBy("doc_id")
+    )
 
 
 # --- BPE merge-step pair counts --------------------------------------------
@@ -742,7 +734,7 @@ def llm_bpe_apply(spark, sf_dir):
 
     Plan: application is MAP-ONLY — one higher-order
     filter/transform/aggregate expression per document (no explode,
-    no shuffle except the final orderBy); the merge rules are
+    no shuffle); the merge rules are
     string literals folded into the expression, i.e. broadcast by
     construction. The iterative pair-replacement is unrolled exactly
     K rounds so the DuckDB oracle replays the identical rounds via
@@ -786,7 +778,6 @@ def llm_bpe_apply(spark, sf_dir):
             F.col("a.c").cast("long").alias("n_char_tokens"),
             F.col("a.t").cast("long").alias("n_bpe_tokens"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -849,7 +840,6 @@ def llm_ngram_novelty(spark, sf_dir):
             .cast("long")
             .alias("novelty_x1e4"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -931,5 +921,4 @@ def llm_source_overlap(spark, sf_dir):
             .cast("long")
             .alias("jaccard_x1e4"),
         )
-        .orderBy("src_a", "src_b")
     )

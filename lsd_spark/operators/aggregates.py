@@ -68,7 +68,6 @@ def agg_groupby_hash(spark, sf_dir):
             F.round(F.avg("l_discount"), 6).alias("avg_disc"),
             F.count("*").alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
     )
 
 
@@ -78,7 +77,7 @@ def agg_groupby_hash(spark, sf_dir):
 )
 def agg_distinct(spark, sf_dir):
     o = load(spark, sf_dir, "orders")
-    return o.select("o_orderpriority").distinct().orderBy("o_orderpriority")
+    return o.select("o_orderpriority").distinct()
 
 
 @register(
@@ -154,7 +153,6 @@ def agg_multi_column(spark, sf_dir):
             F.round(F.min("value"), 2).alias("mnv"),
             F.round(F.max("value"), 2).alias("mxv"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -174,7 +172,6 @@ def agg_histogram(spark, sf_dir):
     return (
         ev.groupBy(F.floor(F.col("value") / 50.0).cast("long").alias("bucket"))
         .agg(F.count("*").alias("cnt"))
-        .orderBy("bucket")
     )
 
 
@@ -204,7 +201,6 @@ def agg_density_map_2d(spark, sf_dir):
             F.count("*").alias("cnt"),
             (F.floor(F.avg(F.coalesce(F.col("value"), F.lit(0.0))) * 100 + 0.5) / 100).alias("av"),
         )
-        .orderBy("t_cell", "v_cell")
     )
 
 
@@ -230,7 +226,6 @@ def agg_percentiles(spark, sf_dir):
     return (
         ev.groupBy("event_type")
         .agg(q(0.25).alias("q25"), q(0.5).alias("q50"), q(0.75).alias("q75"))
-        .orderBy("event_type")
     )
 
 
@@ -260,7 +255,6 @@ def agg_pivot(spark, sf_dir):
             F.coalesce("O", F.lit(0)).alias("o"),
             F.coalesce("P", F.lit(0)).alias("p"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -289,7 +283,6 @@ def agg_stats_corr(spark, sf_dir):
             F.floor(F.covar_samp("o_totalprice", "o_custkey") / 1e4 + 0.5).alias("cv4"),
             F.floor(F.stddev_samp("o_totalprice") / 100 + 0.5).alias("sd2"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -339,7 +332,6 @@ def agg_filtered(spark, sf_dir):
                 F.when(F.col("value").isNotNull(), F.col("user_id"))
             ).alias("u_valued"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -376,7 +368,7 @@ def profile_table(spark, sf_dir):
     )
     return row.selectExpr(
         f"stack({len(_PROFILE_COLS)}, {stack_args}) AS (col, n_nulls, n_distinct)"
-    ).orderBy("col")
+    )
 
 
 @register(
@@ -423,7 +415,6 @@ def agg_phase_fold(spark, sf_dir):
             .cast("long")
             .alias("mean_v2"),
         )
-        .orderBy("user_id", "phase_bin")
     )
 
 
@@ -513,7 +504,6 @@ def period_search_plan(obs, period_days=None, n_bins: int = _PERIOD_NB):
             (F.col("p_us") / F.lit(86_400_000_000)).cast("int").alias("best_period_days"),
             score_q.alias("score_q"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -548,7 +538,6 @@ def agg_lightcurve_stats(spark, sf_dir):
             ).cast("bigint").alias("avg_gap_us"),
             F.floor(F.stddev_samp("value") * 100 + 0.5).cast("bigint").alias("var2"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -582,7 +571,6 @@ def agg_density_multilevel(spark, sf_dir):
         .select("lc.level", "lc.t_cell")
         .groupBy("level", "t_cell")
         .agg(F.count("*").alias("cnt"))
-        .orderBy("level", "t_cell")
     )
 
 
@@ -695,7 +683,6 @@ def agg_retention_cohorts(spark, sf_dir):
         .join(F.broadcast(first), "user_id")
         .groupBy("cohort", (F.col("day") - F.col("cohort")).alias("day_offset"))
         .agg(F.count_distinct("user_id").alias("n_users"))
-        .orderBy("cohort", "day_offset")
     )
 
 
@@ -749,7 +736,6 @@ def agg_variability_eta(spark, sf_dir):
         )
         .filter((F.col("n_obs") >= 3) & (F.col("_var") > 0))
         .drop("_var")
-        .orderBy("user_id")
     )
 
 
@@ -815,7 +801,6 @@ def agg_resample_gapfill(spark, sf_dir):
                 F.floor(F.coalesce("sv", F.lit(0.0)) * 100 + F.lit(0.5)) / 100
             ).alias("sum_value"),
         )
-        .orderBy("event_type", "bin_start_sec")
     )
 
 
@@ -853,7 +838,6 @@ def agg_sample_reservoir(spark, sf_dir):
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= RESERVOIR_K)
         .select("event_type", F.col("rk").cast("long").alias("rk"), "event_id", "h")
-        .orderBy("event_type", "rk")
     )
 
 
@@ -927,7 +911,6 @@ def agg_drift_chi2(spark, sf_dir):
             F.max("tb").cast("long").alias("n_b"),
             F.max("n_buckets").cast("long").alias("n_buckets"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -990,7 +973,6 @@ def agg_quantile_sketch(spark, sf_dir):
             est(95).alias("p95_est"),
             est(99).alias("p99_est"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1055,7 +1037,6 @@ def agg_sigma_clip(spark, sf_dir):
             F.count("*").cast("long").alias("n_kept"),
             F.floor(F.avg("value") * 1000 + 0.5).cast("long").alias("clip_mean_milli"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -1131,7 +1112,6 @@ def agg_structure_function(spark, sf_dir):
             F.count("*").cast("long").alias("n_pairs"),
             F.floor(F.avg("dv") * 1000 + 0.5).cast("long").alias("sf_milli"),
         )
-        .orderBy("event_type", "lag_bin")
     )
 
 
@@ -1199,7 +1179,7 @@ def agg_referential_audit(spark, sf_dir):
     out = rows[0]
     for r in rows[1:]:
         out = out.unionAll(r)
-    return out.orderBy("fk_edge")
+    return out
 
 
 # --- lag-k autocorrelation -------------------------------------------------
@@ -1319,7 +1299,7 @@ def agg_autocorr(spark, sf_dir):
         "lag",
         F.col("n").cast("long").alias("n_pairs"),
         F.expr(_ACF_CLOSE).alias("acf_x1e4"),
-    ).orderBy("event_type", "lag")
+    )
 
 
 # --- weighted median -------------------------------------------------------
@@ -1373,7 +1353,6 @@ def agg_weighted_median(spark, sf_dir):
         .agg(
             F.floor(F.min("v") * 100 + 0.5).cast("long").alias("wmedian_cents")
         )
-        .orderBy("flag")
     )
 
 
@@ -1468,7 +1447,6 @@ def agg_gini(spark, sf_dir):
             F.col("n").cast("long").alias("n"),
             F.expr(GINI_CLOSING_EXPR).alias("gini_x1e4"),
         )
-        .orderBy("pri")
     )
 
 
@@ -1541,7 +1519,6 @@ def agg_benford(spark, sf_dir):
             .alias("pct_x1e4"),
             F.expr(_BENFORD_CASE).cast("long").alias("benford_x1e4"),
         )
-        .orderBy("digit")
     )
 
 
@@ -1585,7 +1562,6 @@ def agg_heatmap_hour_dow(spark, sf_dir):
         .select(F.col("dow").cast("int"), F.col("hour").cast("int"))
         .groupBy("dow", "hour")
         .agg(F.count("*").cast("long").alias("cnt"))
-        .orderBy("dow", "hour")
     )
 
 
@@ -1665,7 +1641,6 @@ def agg_theilsen_slope(spark, sf_dir):
             .cast("long")
             .alias("slope_milli_per_day"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -1823,11 +1798,6 @@ def agg_rollup(spark, sf_dir):
             .alias("gid"),
         )
         .select("r_name", "n_name", "n_cust", "bal_cents", "gid")
-        .orderBy(
-            "gid",
-            F.col("r_name").asc_nulls_first(),
-            F.col("n_name").asc_nulls_first(),
-        )
     )
 
 
@@ -1938,7 +1908,6 @@ def agg_count_min_sketch(spark, sf_dir):
             F.col("true_cnt").cast("long").alias("true_cnt"),
             F.col("est_cnt").cast("long").alias("est_cnt"),
         )
-        .orderBy("k")
     )
 
 
@@ -1989,5 +1958,4 @@ def agg_mode_deterministic(spark, sf_dir):
             F.col("q").cast("long").alias("mode_qty"),
             F.col("n").cast("long").alias("n_occurrences"),
         )
-        .orderBy("flag")
     )

@@ -95,7 +95,6 @@ def filter_between_range(spark, sf_dir):
         ev.filter(F.col("ts").between(lo, hi))
         .groupBy("event_type")
         .agg(F.count("*").alias("cnt"))
-        .orderBy("event_type")
     )
 
 
@@ -117,6 +116,5 @@ def filter_scalar_subquery(spark, sf_dir):
     register_views(spark, sf_dir)
     return spark.sql(
         "SELECT o_orderkey, ROUND(o_totalprice, 2) AS price FROM orders "
-        "WHERE o_totalprice > 1.5 * (SELECT AVG(o_totalprice) FROM orders) "
-        "ORDER BY o_orderkey"
+        "WHERE o_totalprice > 1.5 * (SELECT AVG(o_totalprice) FROM orders)"
     )

@@ -42,7 +42,6 @@ def join_inner_hash(spark, sf_dir):
         o.join(li, o.o_orderkey == li.l_orderkey, "inner")
         .groupBy("o_orderstatus")
         .agg(F.count("*").alias("cnt"))
-        .orderBy("o_orderstatus")
     )
 
 
@@ -104,7 +103,6 @@ def join_multiway(spark, sf_dir):
         .join(F.broadcast(dim), o.o_custkey == dim.c_custkey)
         .groupBy("n_name")
         .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("n_name"))
     )
 
 
@@ -153,7 +151,6 @@ def join_broadcast(spark, sf_dir):
     return (
         n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .select("n_name")
-        .orderBy("n_name")
     )
 
 
@@ -396,7 +393,6 @@ def join_interval_overlap(spark, sf_dir):
         .filter((F.col("ls") < F.col("re")) & (F.col("rs") < F.col("le")))
         .groupBy("l_id")
         .agg(F.count("*").alias("n_overlaps"))
-        .orderBy("l_id")
     )
 
 
@@ -523,7 +519,6 @@ def join_bloom_prune(spark, sf_dir):
             "c_custkey",
             F.coalesce(F.col("in_build"), F.lit(0)).cast("int").alias("in_build"),
         )
-        .orderBy("c_custkey")
     )
 
 
@@ -562,6 +557,5 @@ def join_lateral_topn(spark, sf_dir):
         "FROM lsd_lat_nation, LATERAL ("
         "SELECT c_name, c_acctbal FROM lsd_lat_customer "
         "WHERE c_nationkey = n_nationkey "
-        "ORDER BY c_acctbal DESC, c_name LIMIT 2) c "
-        "ORDER BY n_name, bal_cents DESC, c_name"
+        "ORDER BY c_acctbal DESC, c_name LIMIT 2) c"
     )

@@ -36,7 +36,7 @@ def set_union_all(spark, sf_dir):
 def set_union_distinct(spark, sf_dir):
     c = load(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("k"))
     s = load(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("k"))
-    return c.unionByName(s).distinct().orderBy("k")
+    return c.unionByName(s).distinct()
 
 
 @register(
@@ -49,7 +49,7 @@ def set_union_distinct(spark, sf_dir):
 def set_intersect(spark, sf_dir):
     c = load(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("k"))
     s = load(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("k"))
-    return c.intersect(s).orderBy("k")
+    return c.intersect(s)
 
 
 @register(
@@ -62,7 +62,7 @@ def set_intersect(spark, sf_dir):
 def set_except(spark, sf_dir):
     c = load(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("k"))
     s = load(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("k"))
-    return c.subtract(s).orderBy("k")  # subtract == SQL EXCEPT (distinct)
+    return c.subtract(s)  # subtract == SQL EXCEPT (distinct)
 
 
 @register(
@@ -80,7 +80,7 @@ def set_except_all(spark, sf_dir):
     the bag-semantics complement (set_except is the set version)."""
     o = load(spark, sf_dir, "orders").select(F.col("o_custkey").alias("custkey"))
     c = load(spark, sf_dir, "customer").select(F.col("c_custkey").alias("custkey")).distinct()
-    return o.exceptAll(c).orderBy("custkey")
+    return o.exceptAll(c)
 
 
 @register(
@@ -99,7 +99,7 @@ def set_intersect_all(spark, sf_dir):
     o = load(spark, sf_dir, "orders")
     f = o.filter(F.col("o_orderstatus") == "F").select("o_orderpriority")
     op_ = o.filter(F.col("o_orderstatus") == "O").select("o_orderpriority")
-    return f.intersectAll(op_).orderBy("o_orderpriority")
+    return f.intersectAll(op_)
 
 
 @register(
@@ -150,5 +150,4 @@ def set_symmetric_diff(spark, sf_dir):
             .otherwise(F.lit("b_only"))
             .alias("side"),
         )
-        .orderBy("k", "side")
     )

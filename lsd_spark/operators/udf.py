@@ -219,6 +219,5 @@ def udtf_lateral_native(spark, sf_dir):
     )
     return spark.sql(
         "SELECT t.* FROM lsd_udtf_docs, "
-        "LATERAL lsd_split_chunks(doc_id, text) t "
-        "ORDER BY doc_id, chunk_idx"
+        "LATERAL lsd_split_chunks(doc_id, text) t"
     )

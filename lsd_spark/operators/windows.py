@@ -241,7 +241,7 @@ def win_first_last(spark, sf_dir):
         F.first("event_id").over(w).alias("first_ev"),
         F.last("event_id").over(w).alias("last_ev"),
         F.nth_value("event_id", 2).over(w).alias("second_ev"),
-    ).orderBy("user_id", "event_id")
+    )
 
 
 @register(
@@ -261,7 +261,7 @@ def win_cume_dist(spark, sf_dir):
         "o_orderkey",
         "o_orderstatus",
         F.round(F.cume_dist().over(w), 6).alias("cd"),
-    ).orderBy("o_orderkey")
+    )
 
 
 @register(
@@ -307,7 +307,6 @@ def win_rolling_median(spark, sf_dir):
             "user_id",
             F.floor(med * 10000 + 0.5).cast("bigint").alias("med4"),
         )
-        .orderBy("event_id")
     )
 
 
@@ -343,7 +342,6 @@ def win_streak(spark, sf_dir):
         .agg(F.count("*").alias("len"))
         .groupBy("user_id")
         .agg(F.max("len").alias("max_streak"))
-        .orderBy("user_id")
     )
 
 
@@ -395,7 +393,6 @@ def win_sessionize(spark, sf_dir):
             F.max("t_us").alias("end_us"),
             (F.max("t_us") - F.min("t_us")).alias("duration_us"),
         )
-        .orderBy("user_id", "session_id")
     )
 
 
@@ -477,7 +474,7 @@ def win_interpolate_linear(spark, sf_dir):
         "user_id",
         F.col("v").isNull().alias("was_masked"),
         F.round(filled, 4).alias("value_filled"),
-    ).orderBy("event_id")
+    )
 
 
 EWMA_ALPHA = 0.5  # powers of 0.5 are exact binary doubles
@@ -538,9 +535,7 @@ def win_ewma(spark, sf_dir):
         ),
         F.lit(0.0),
     )
-    return ev.select(
-        "event_id", "user_id", F.round(num / den, 4).alias("ewma")
-    ).orderBy("event_id")
+    return ev.select("event_id", "user_id", F.round(num / den, 4).alias("ewma"))
 
 
 # --- rolling z-score anomaly flags ----------------------------------------
@@ -622,7 +617,7 @@ def win_zscore_anomaly(spark, sf_dir):
         .otherwise(0)
         .cast("int")
         .alias("is_anomaly"),
-    ).orderBy("event_id")
+    )
 
 
 # --- CUSUM drift statistic -------------------------------------------------
@@ -683,7 +678,7 @@ def win_cusum_drift(spark, sf_dir):
         F.floor((run_m * n - rn * tot_m) / n.cast("double") + 0.5)
         .cast("long")
         .alias("cusum_milli"),
-    ).orderBy("event_id")
+    )
 
 
 # --- median absolute deviation -----------------------------------------------
@@ -750,7 +745,6 @@ def win_mad_robust(spark, sf_dir):
     return (
         r2.filter(F.col("rn") == F.expr("(n + 1) div 2"))
         .select("user_id", F.col("dev").cast("long").alias("mad_milli"))
-        .orderBy("user_id")
     )
 
 
@@ -804,4 +798,4 @@ def win_pct_change(spark, sf_dir):
             ).cast("long")
         )
         .alias("pct_x1e4"),
-    ).orderBy("event_id")
+    )

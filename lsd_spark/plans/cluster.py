@@ -297,16 +297,12 @@ def min_label_fixpoint(
                         ],
                     }
                 ).astype("int64")
-                return spark.createDataFrame(
-                    lab, schema="vec_id bigint, object_id bigint"
-                ).orderBy("vec_id")
+                return spark.createDataFrame(lab, schema="vec_id bigint, object_id bigint")
             roots = _uf_roots(
                 zip(e_pd.iloc[:, 0].to_numpy(), e_pd.iloc[:, 1].to_numpy())
             )
             if not roots:
-                return emb.select(
-                    "vec_id", F.col("vec_id").alias("object_id")
-                ).orderBy("vec_id")
+                return emb.select("vec_id", F.col("vec_id").alias("object_id"))
             if len(roots) <= QUOTIENT_MAP_LITERAL_MAX:
                 # try_element_at, not element_at: NULL on a missing key
                 # under BOTH ANSI settings (round-14 ADVICE — element_at
@@ -322,7 +318,6 @@ def min_label_fixpoint(
                             F.col("vec_id"),
                         ).alias("object_id"),
                     )
-                    .orderBy("vec_id")
                 )
             import pandas as pd
 
@@ -343,7 +338,6 @@ def min_label_fixpoint(
                     "vec_id",
                     F.coalesce("q_root", "vec_id").alias("object_id"),
                 )
-                .orderBy("vec_id")
             )
         # truncated: the graph is not small — discard and run the
         # distributed contraction below (rare; one settled-frame scan)
@@ -435,7 +429,7 @@ def min_label_fixpoint(
             # call / cache clear, after the caller's action consumed it
             _PINNED_CACHE.append(local_agg)
             LAST_FIXPOINT_PATH["path"] = "probe-converged"
-            return seed.orderBy("vec_id")
+            return seed
         if n_q <= QUOTIENT_SINGLE_TASK_MAX:
             # LEVEL-2 CONTRACTION, driver-side: all of a node's
             # labels are pairwise quotient-connected through that
@@ -453,7 +447,7 @@ def min_label_fixpoint(
             if len(roots) <= QUOTIENT_MAP_LITERAL_MAX:
                 # small quotient: apply the label mapping as a literal
                 # MAP expression — a scalar lookup in the projection,
-                # so the final job is scan -> project -> sort with no
+                # so the final job is scan -> project with no
                 # BroadcastExchange and no createDataFrame round-trip
                 # (round 13; identical output, one less exchange).
                 # try_element_at: ANSI-safe on missing keys (round-14
@@ -467,7 +461,6 @@ def min_label_fixpoint(
                             F.col("object_id"),
                         ).alias("object_id"),
                     )
-                    .orderBy("vec_id")
                 )
             import pandas as pd
 
@@ -489,7 +482,6 @@ def min_label_fixpoint(
                     "vec_id",
                     F.coalesce("q_root", "object_id").alias("object_id"),
                 )
-                .orderBy("vec_id")
             )
         labels = seed.localCheckpoint(
             eager=True, storageLevel=StorageLevel.DISK_ONLY
@@ -644,7 +636,7 @@ def _fixpoint_loop(
         labels = updated.select("vec_id", F.col("new_id").alias("object_id"))
         if changed == 0:
             edges.unpersist()
-            return labels.orderBy("vec_id")
+            return labels
     raise RuntimeError(
         f"cluster_fof: min-label propagation did not converge in {MAX_ITERS} "
         "iterations (min-label eccentricity exceeds the cap; is the match "
@@ -750,7 +742,7 @@ def _alternating_loop(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
                 .groupBy("vec_id")
                 .agg(F.min(F.coalesce("object_id", "vec_id")).alias("object_id"))
             )
-            out = labels.orderBy("vec_id").localCheckpoint(
+            out = labels.localCheckpoint(
                 eager=True, storageLevel=level
             )
             edges.unpersist()
@@ -914,7 +906,6 @@ def graph_degree_hist(spark, sf_dir):
         .agg(F.count("*").alias("degree"))
         .groupBy("degree")
         .agg(F.count("*").alias("n_nodes"))
-        .orderBy("degree")
     )
 
 
@@ -1005,7 +996,6 @@ def graph_pagerank(spark, sf_dir):
             "node",
             F.floor(F.col("pr") * 1_000_000_000 + F.lit(0.5)).cast("long").alias("pr_q"),
         )
-        .orderBy("node")
     )
 
 
@@ -1111,7 +1101,6 @@ def graph_triangle_count(spark, sf_dir):
             "degree",
             F.coalesce(F.col("n_tri"), F.lit(0).cast("long")).alias("n_tri"),
         )
-        .orderBy("node")
     )
 
 
@@ -1176,5 +1165,4 @@ def llm_dedup_keep_best(spark, sf_dir):
         .withColumn("rn", F.row_number().over(wr))
         .filter((F.col("rn") == 1) & (F.col("group_size") > 1))
         .select("object_id", F.col("doc_id").alias("keeper"), "group_size")
-        .orderBy("object_id")
     )

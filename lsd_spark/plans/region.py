@@ -344,7 +344,7 @@ def filter_region_cone(spark, sf_dir):
     different plan that agrees iff the cell set is a true superset."""
     path = build_region_layout(spark, sf_dir)
     pts = spark.read.parquet(path)
-    return region_select(pts, CONE).orderBy("event_id")
+    return region_select(pts, CONE)
 
 
 @register("filter_region_poly", oracle=_region_oracle(POLY))
@@ -353,7 +353,7 @@ def filter_region_poly(spark, sf_dir):
     bbox cells + even-odd ray casting with literal slopes, derived
     cell keys (no layout needed — the same compile serves ad-hoc
     tables)."""
-    return region_select(sphere_points(spark, sf_dir, None), POLY).orderBy("event_id")
+    return region_select(sphere_points(spark, sf_dir, None), POLY)
 
 
 @register("filter_region_algebra", oracle=_region_oracle(ALGEBRA))
@@ -363,9 +363,7 @@ def filter_region_algebra(spark, sf_dir):
     UNVERIFIED]. Cell sets compose set-wise (union of candidates,
     minus keeps the left side's), the refine composes boolean-wise;
     the whole composite is still one map-only scan."""
-    return region_select(sphere_points(spark, sf_dir, None), ALGEBRA).orderBy(
-        "event_id"
-    )
+    return region_select(sphere_points(spark, sf_dir, None), ALGEBRA)
 
 
 # --- HEALPix covering: the second pruning geometry ------------------------
@@ -490,7 +488,6 @@ def filter_region_healpix(spark, sf_dir):
             f"{RA_SPARK_SQL} AS ra",
             f"{DEC_SPARK_SQL} AS dec",
         )
-        .orderBy("event_id")
     )
 
 
@@ -530,7 +527,6 @@ def filter_region_time(spark, sf_dir):
     return (
         region_select(pts, CONE, keep_all=True)
         .select("event_id", "ra", "dec", "t_us")
-        .orderBy("event_id")
     )
 
 
@@ -621,7 +617,6 @@ def join_point_in_polygon(spark, sf_dir):
     return (
         pts.join(broadcast(quads), cond, "inner")
         .select("event_id", "poly_id")
-        .orderBy("event_id", "poly_id")
     )
 
 
@@ -676,5 +671,4 @@ def scan_partition_prune_dynamic(spark, sf_dir):
         fact.join(F.broadcast(targets), "z")
         .groupBy("z")
         .agg(F.count("*").alias("n_pts"))
-        .orderBy("z")
     )

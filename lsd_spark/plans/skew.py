@@ -67,5 +67,4 @@ def join_skew_salted(spark, sf_dir):
             F.count("*").alias("cnt"),
             (F.floor(F.sum("l_quantity") * 100 + 0.5) / 100).alias("sq"),
         )
-        .orderBy("o_orderstatus")
     )

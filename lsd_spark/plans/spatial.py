@@ -159,9 +159,7 @@ def join_xmatch_2d(spark, sf_dir):
         order_cols=[F.col("dist").asc(), F.col("r_id").asc()],
         nmax=1,
     )
-    return best.select(
-        "l_id", "r_id", F.round("dist", 9).alias("dist")
-    ).orderBy("l_id")
+    return best.select("l_id", "r_id", F.round("dist", 9).alias("dist"))
 
 
 @register(
@@ -180,7 +178,6 @@ def xmatch_2d_count(spark, sf_dir):
         radius_candidates(spark, sf_dir)
         .groupBy("l_id")
         .agg(F.count("*").alias("n_neighbors"))
-        .orderBy("l_id")
     )
 
 
@@ -228,7 +225,6 @@ def fn_morton_key(spark, sf_dir):
     return (
         ev.selectExpr("event_id", f"({hx}) div 500 AS cx", f"({hy}) div 500 AS cy")
         .selectExpr("event_id", "cx", "cy", _morton_sql("cx", "cy") + " AS morton")
-        .orderBy("event_id")
     )
 
 
@@ -350,7 +346,7 @@ def source_packed_id(spark, sf_dir):
         f"_id div {PACK_EPOCH_SHIFT} AS epoch",
         f"(_id div {PACK_CELL_SHIFT}) % {PACK_EPOCH_SHIFT // PACK_CELL_SHIFT} AS cell",
         f"_id % {PACK_CELL_SHIFT} AS idx",
-    ).orderBy("event_id")
+    )
 
 
 _ZORDER_ORACLE = (
@@ -383,6 +379,8 @@ def sink_zorder(spark, sf_dir):
             _purchase_detections(spark, sf_dir),
             "epoch", "cx", "cy", "event_id",
         )
+        # the range layout is the point: file min/max stats on _id
+        # are what let the zone-map read below prune files
         (
             det.repartitionByRange(8, "_id")
             .sortWithinPartitions("_id")
@@ -409,7 +407,6 @@ def sink_zorder(spark, sf_dir):
             F.max("cell").alias("mx_cell"),
             F.sum("idx").cast("long").alias("sum_idx"),
         )
-        .orderBy("epoch")
     )
 
 
@@ -439,7 +436,7 @@ def join_xmatch_2d_knn(spark, sf_dir):
         "r_id",
         F.round("dist", 9).alias("dist"),
         F.col("_rn").cast("int").alias("rn"),
-    ).orderBy("l_id", "rn")
+    )
 
 
 # --- 2-D margin layout: LSD's neighbor cache in its native geometry ------
@@ -529,7 +526,7 @@ def join_xmatch_2d_margin(spark, sf_dir):
         order_cols=[F.col("dist").asc(), F.col("r_id").asc()],
         nmax=1,
     )
-    return best.select("l_id", "r_id", F.round("dist", 9).alias("dist")).orderBy("l_id")
+    return best.select("l_id", "r_id", F.round("dist", 9).alias("dist"))
 
 
 # --- 2-D friends-of-friends: the literal make-object-catalog ------------
@@ -884,9 +881,7 @@ def cluster_fof_2d(spark, sf_dir):
     labels = min_label_fixpoint(
         pts, pairs, local_labels=local, seed_complete=True
     )
-    return labels.select(
-        F.col("vec_id").alias("point_id"), "object_id"
-    ).orderBy("point_id")
+    return labels.select(F.col("vec_id").alias("point_id"), "object_id")
 
 
 @register(
@@ -962,7 +957,6 @@ def agg_object_coadd(spark, sf_dir):
             .cast("bigint")
             .alias("cy_q"),
         )
-        .orderBy("object_id")
     )
 
 
@@ -1033,6 +1027,4 @@ def cluster_fof_2d_super(spark, sf_dir):
     labels = min_label_fixpoint(
         pts, pairs, local_labels=local, seed_complete=True
     )
-    return labels.select(
-        F.col("vec_id").alias("point_id"), "object_id"
-    ).orderBy("point_id")
+    return labels.select(F.col("vec_id").alias("point_id"), "object_id")

@@ -534,7 +534,6 @@ def fn_healpix_nest(spark, sf_dir):
         .withColumn("parent_pix", F.floor(F.col("pix") / 4).cast("long"))
         .groupBy("parent_pix", "pix")
         .agg(F.count("*").alias("cnt"))
-        .orderBy("parent_pix", "pix")
     )
 
 
@@ -564,7 +563,6 @@ def fn_healpix_key(spark, sf_dir):
         healpix_bound(pts, N_SIDE, "ring", "hpx")
         .groupBy("hpx")
         .agg(F.count("*").alias("cnt"))
-        .orderBy("hpx")
     )
 
 
@@ -609,7 +607,7 @@ def agg_density_sphere(spark, sf_dir):
     pts = pts.withColumn("z", z).withColumn(
         "b", F.floor(F.col("ra") * F.element_at(nb_arr, F.col("z") + 1) / F.lit(360.0)).cast("int")
     )
-    return pts.groupBy("z", "b").agg(F.count("*").alias("cnt")).orderBy("z", "b")
+    return pts.groupBy("z", "b").agg(F.count("*").alias("cnt"))
 
 
 @register(
@@ -630,9 +628,7 @@ def join_xmatch_sphere(spark, sf_dir):
         sphere_points(spark, sf_dir, "click"),
         R_SPHERE,
     )
-    return cand.select(
-        "l_id", "r_id", F.round("dist", 9).alias("dist_deg")
-    ).orderBy("l_id", "r_id")
+    return cand.select("l_id", "r_id", F.round("dist", 9).alias("dist_deg"))
 
 
 @register(
@@ -653,9 +649,7 @@ def xmatch_sphere_count(spark, sf_dir):
         sphere_points(spark, sf_dir, "click"),
         R_SPHERE,
     )
-    return (
-        cand.groupBy("l_id").agg(F.count("*").alias("n_matches")).orderBy("l_id")
-    )
+    return cand.groupBy("l_id").agg(F.count("*").alias("n_matches"))
 
 
 # --- spherical margin (neighbor-cache) layout ---------------------------
@@ -834,9 +828,7 @@ def join_xmatch_sphere_margin(spark, sf_dir):
         order_cols=[F.col("dist").asc(), F.col("r_id").asc()],
         nmax=1,
     )
-    return best.select(
-        "l_id", "r_id", F.round("dist", 9).alias("dist_deg")
-    ).orderBy("l_id")
+    return best.select("l_id", "r_id", F.round("dist", 9).alias("dist_deg"))
 
 
 @register(
@@ -867,9 +859,7 @@ def join_xmatch_sphere_knn(spark, sf_dir):
         order_cols=[F.col("dist").asc(), F.col("r_id").asc()],
         nmax=1,
     )
-    return best.select(
-        "l_id", "r_id", F.round("dist", 9).alias("dist_deg")
-    ).orderBy("l_id")
+    return best.select("l_id", "r_id", F.round("dist", 9).alias("dist_deg"))
 
 
 # --- moving-object tracklet linking (LSD heritage: Pan-STARRS MOPS,
@@ -927,7 +917,6 @@ def join_tracklet_link(spark, sf_dir):
             day_a.cast("long").alias("day_a"),
             F.round("dist", 9).alias("dist_deg"),
         )
-        .orderBy("det_a", "det_b")
     )
 
 
@@ -1017,7 +1006,6 @@ def agg_density_adaptive(spark, sf_dir):
         )
         .groupBy("nside", "cell")
         .agg(F.count("*").alias("n"))
-        .orderBy("nside", "cell")
     )
 
 
@@ -1105,7 +1093,6 @@ def sink_density_adaptive(spark, sf_dir):
             F.col("cell").cast("long").alias("cell"),
         )
         .agg(F.count("*").alias("n"))
-        .orderBy("nside", "cell")
     )
 
 
@@ -1202,7 +1189,6 @@ def join_xmatch_sphere_chain(spark, sf_dir):
             F.round("dist_ab", 9).alias("dist_ab_deg"),
             F.round("dist_bc", 9).alias("dist_bc_deg"),
         )
-        .orderBy("a_id")
     )
 
 
@@ -1273,7 +1259,7 @@ def agg_angular_corr(spark, sf_dir):
         )
         .cast("long")
         .alias("frac_ppm"),
-    ).orderBy("bin")
+    )
 
 
 # --- Bayesian probabilistic cross-match ----------------------------------
@@ -1360,7 +1346,6 @@ def join_xmatch_bayes(spark, sf_dir):
         scored.withColumn("rn", F.row_number().over(w))
         .filter((F.col("rn") == 1) & (F.col("lnb") > 0))
         .select("l_id", "r_id", "lnb")
-        .orderBy("l_id")
     )
 
 
@@ -1412,7 +1397,6 @@ def join_xmatch_mutual(spark, sf_dir):
         .withColumn("rr", F.row_number().over(wr))
         .filter((F.col("rl") == 1) & (F.col("rr") == 1))
         .select("l_id", "r_id", F.col("dist").alias("dist_deg"))
-        .orderBy("l_id")
     )
 
 
@@ -1488,7 +1472,6 @@ def agg_completeness_mag(spark, sf_dir):
             .cast("long")
             .alias("completeness_x1e4"),
         )
-        .orderBy("mag_bin")
     )
 
 
@@ -1576,9 +1559,7 @@ def join_xmatch_pm_epoch(spark, sf_dir):
     cand = sphere_xmatch(
         l_pts, sphere_points(spark, sf_dir, "click"), R_SPHERE
     )
-    return cand.select(
-        "l_id", "r_id", F.round("dist", 9).alias("dist_deg")
-    ).orderBy("l_id", "r_id")
+    return cand.select("l_id", "r_id", F.round("dist", 9).alias("dist_deg"))
 
 
 # --- Hess diagram (color-magnitude density) --------------------------------
@@ -1630,7 +1611,6 @@ def agg_hess_diagram(spark, sf_dir):
             F.expr("CAST(gm div 1000 AS INT)").alias("mag_bin"),
         )
         .agg(F.count("*").cast("long").alias("cnt"))
-        .orderBy("color_bin", "mag_bin")
     )
 
 
@@ -1682,5 +1662,4 @@ def join_self_nearest_sphere(spark, sf_dir):
         )
         .filter(F.col("rn") == 1)
         .select("l_id", F.col("r_id").alias("nn_id"), "dist_deg")
-        .orderBy("l_id")
     )

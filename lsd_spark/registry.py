@@ -11,10 +11,13 @@ executing it warm at test scale — py4j round-trips + Catalyst
 analysis/optimization dominate (measured ~0.2-0.4 s/query at sf0.1
 vs ~0.03-0.13 s to re-execute an already-analyzed plan). The
 registry therefore memoizes the *logical plan* (the DataFrame
-object) per (session, sf_dir, query). Every action on the cached
-object still re-executes the physical plan against the data — this
-is the classic prepared-statement / plan-cache feature, not result
-caching. At 100 TB the same cache amortizes Catalyst work across
+object) per (session, sf_dir, query) — the classic
+prepared-statement / plan-cache feature, not result caching: each
+action reads the data again. Repeated actions on the SAME object
+reuse its executed plan's shuffle files (Spark skips the map stages
+whose output exists), so a caller that times or re-checks an op
+acts on a fresh `.alias(...)` of it, which plans and runs every
+stage anew. At 100 TB the same cache amortizes Catalyst work across
 repeated parameter-free queries; execution cost is untouched.
 
 Ops whose *builder* has per-call side effects (runs a streaming job,

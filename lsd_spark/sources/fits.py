@@ -370,7 +370,7 @@ def _fixture_path(spark: SparkSession, sf_dir: str) -> str:
                 "n_regionkey",
                 (F.col("n_nationkey").cast("double") / 4.0).alias("w"),
             )
-            .orderBy("n_nationkey")
+            .orderBy("n_nationkey")  # the FITS file's on-disk row order
             .collect()
         )
         path = os.path.join(base, "nation.fits")
@@ -408,7 +408,7 @@ def source_fits_import(spark, sf_dir):
     The 25-row fixture collect is the build side only; the READ path
     is the thing under test and is one-task-per-file parallel."""
     path = _fixture_path(spark, sf_dir)
-    return read_fits(spark, os.path.dirname(path)).orderBy("n_nationkey")
+    return read_fits(spark, os.path.dirname(path))
 
 
 @register(
@@ -444,7 +444,7 @@ def fn_fits_keyword(spark, sf_dir):
         F.element_at("_hdr", F.lit("NAXIS1")).cast("bigint").alias("naxis1"),
         F.element_at("_hdr", F.lit("TTYPE2")).alias("ttype2"),
         F.element_at("_hdr", F.lit("TFIELDS")).cast("bigint").alias("tfields"),
-    ).orderBy("n_nationkey")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -564,15 +564,13 @@ def source_fits_datasource(spark, sf_dir):
     file, executor-side stdlib parse — the connector form of
     read_fits(), sharing its oracle."""
     if not HAVE_DATASOURCE_API:
-        return read_fits(spark, os.path.dirname(_fixture_path(spark, sf_dir))).orderBy(
-            "n_nationkey"
-        )
+        return read_fits(spark, os.path.dirname(_fixture_path(spark, sf_dir)))
     path = _fixture_path(spark, sf_dir)
     try:
         spark.dataSource.register(make_fits_datasource())
     except Exception:
         pass  # already registered in this session
-    return spark.read.format("fits").load(path).orderBy("n_nationkey")
+    return spark.read.format("fits").load(path)
 
 
 def _scaled_fixture_path(spark: SparkSession, sf_dir: str) -> str:
@@ -593,7 +591,7 @@ def _scaled_fixture_path(spark: SparkSession, sf_dir: str) -> str:
         rows = (
             load(spark, sf_dir, "nation")
             .select("n_nationkey", "n_name")
-            .orderBy("n_nationkey")
+            .orderBy("n_nationkey")  # the FITS file's on-disk row order
             .collect()
         )
         path = os.path.join(base, "nation_scaled.fits")
@@ -642,7 +640,7 @@ def source_fits_scaled(spark, sf_dir):
     the 0.01-scaled column reproduces bit-identical float64 (both
     sides compute tzero + tscal * raw in IEEE double)."""
     path = _scaled_fixture_path(spark, sf_dir)
-    return read_fits(spark, os.path.dirname(path)).orderBy("n_nationkey")
+    return read_fits(spark, os.path.dirname(path))
 
 
 # ---------------------------------------------------------------------------
@@ -778,7 +776,6 @@ def sink_fits(spark, sf_dir):
             F.count("*").alias("cnt"),
             F.floor(F.sum("c_acctbal") * 100 + F.lit(0.5)).cast("long").alias("bal2"),
         )
-        .orderBy("c_mktsegment")
     )
     # pin write completeness into the result's lineage-free copy
     res = out.localCheckpoint(eager=True)
@@ -1083,7 +1080,6 @@ def source_fits_image(spark, sf_dir):
             "natkey", "bitpix_primary", "bitpix_ext",
             "px_sum", "px_min", "px_max", "f_mean",
         )
-        .orderBy("natkey")
     )
 
 
@@ -1211,7 +1207,6 @@ def source_fits_wcs(spark, sf_dir):
                 )
             ).alias("roundtrip_err"),
         )
-        .orderBy("natkey", "px", "py")
     )
 
 
@@ -1380,7 +1375,6 @@ def source_fits_wcs_sin(spark, sf_dir):
                 )
             ).alias("roundtrip_err"),
         )
-        .orderBy("natkey", "px", "py")
     )
 
 
@@ -1566,7 +1560,6 @@ def source_fits_wcs_sip(spark, sf_dir):
                 F.greatest(F.abs(F.col("du")), F.abs(F.col("dv")))
             ).alias("dist_px"),
         )
-        .orderBy("natkey", "px", "py")
     )
 
 
@@ -1719,7 +1712,6 @@ def pipeline_survey_ingest(spark, sf_dir):
             F.count("*").alias("n_det"),
             F.sum("flux").alias("flux_sum"),
         )
-        .orderBy("hpx")
     )
 
 
@@ -1925,7 +1917,6 @@ def _wcs_zenithal_op(spark, sf_dir: str, code: str):
                 )
             ).alias("roundtrip_err"),
         )
-        .orderBy("natkey", "px", "py")
     )
 
 

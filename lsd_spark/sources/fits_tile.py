@@ -678,7 +678,6 @@ def source_fits_rice(spark, sf_dir):
             (F.array_max("px") + 32768).cast("bigint").alias("px_max"),
             (F.col("z_bytes") < F.size("px") * 2).alias("compressed_smaller"),
         )
-        .orderBy("natkey")
     )
 
 
@@ -764,7 +763,6 @@ def source_fits_rice_cutout(spark, sf_dir):
             F.array_min("px").cast("bigint").alias("px_min"),
             F.array_max("px").cast("bigint").alias("px_max"),
         )
-        .orderBy("natkey")
     )
 
 
@@ -848,7 +846,6 @@ def source_fits_gzip(spark, sf_dir):
             (F.array_max("px") + 32768).cast("bigint").alias("px_max"),
             (F.col("z_bytes") < F.size("px") * 2).alias("compressed_smaller"),
         )
-        .orderBy("natkey")
     )
 
 
@@ -937,5 +934,4 @@ def source_fits_hcompress(spark, sf_dir):
             (F.array_max("px") + 32768).cast("bigint").alias("px_max"),
             (F.col("z_bytes") < F.size("px") * 2).alias("compressed_smaller"),
         )
-        .orderBy("natkey")
     )

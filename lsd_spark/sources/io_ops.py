@@ -64,7 +64,6 @@ def source_text_import(spark, sf_dir):
     return (
         back.groupBy("lang")
         .agg(F.count("*").alias("cnt"), F.sum("n_chars").alias("total_chars"))
-        .orderBy("lang")
     )
 
 
@@ -100,7 +99,6 @@ def sink_into(spark, sf_dir):
         back.filter(F.col("o_year") >= 1997)
         .groupBy("o_year")
         .agg(F.count("*").alias("cnt"), F.round(F.sum("o_totalprice"), 2).alias("total"))
-        .orderBy("o_year")
     )
     out = res.localCheckpoint(eager=True) if hasattr(res, "localCheckpoint") else res
     shutil.rmtree(tmp, ignore_errors=True)
@@ -193,10 +191,7 @@ def sink_bucketed(spark, sf_dir):
     plan_str = joined._jdf.queryExecution().executedPlan().toString()
     final_plan = plan_str.split("== Initial Plan ==")[0]
     n_exchanges = final_plan.count("Exchange hashpartitioning")
-    return (
-        joined.withColumn("join_exchanges", F.lit(n_exchanges))
-        .orderBy("o_orderstatus")
-    )
+    return joined.withColumn("join_exchanges", F.lit(n_exchanges))
 
 
 @register(
@@ -225,7 +220,6 @@ def source_schema_evolution(spark, sf_dir):
     res = (
         merged.groupBy(F.col("n_population").isNull().alias("is_old_schema"))
         .agg(F.count("*").alias("cnt"))
-        .orderBy("is_old_schema")
     )
     out = res.localCheckpoint(eager=True)
     shutil.rmtree(tmp, ignore_errors=True)
@@ -273,7 +267,6 @@ def source_schema_rename(spark, sf_dir):
             "n_nationkey",
             F.coalesce("n_label", "n_name").alias("n_label"),
         )
-        .orderBy("gen", "n_nationkey")
         .localCheckpoint(eager=True)
     )
     shutil.rmtree(tmp, ignore_errors=True)
@@ -319,7 +312,6 @@ def source_schema_drop(spark, sf_dir):
             "n_name",
             F.lit(bool(retained)).alias("raw_retains_dropped"),
         )
-        .orderBy("gen", "n_nationkey")
         .localCheckpoint(eager=True)
     )
     shutil.rmtree(tmp, ignore_errors=True)
@@ -374,7 +366,6 @@ def source_schema_widen(spark, sf_dir):
         )
     out = (
         merged.select("gen", "n_nationkey", "n_pop")
-        .orderBy("gen", "n_nationkey")
         .localCheckpoint(eager=True)
     )
     shutil.rmtree(tmp, ignore_errors=True)
@@ -453,7 +444,6 @@ def merge_upsert(spark, sf_dir):
             F.coalesce(F.col("u_custkey"), F.col("c_custkey")).alias("c_custkey"),
             F.round(F.coalesce(F.col("u_acctbal"), F.col("c_acctbal")), 2).alias("c_acctbal"),
         )
-        .orderBy("c_custkey")
     )
 
 
@@ -474,7 +464,7 @@ def sink_compact(spark, sf_dir):
     n.repartition(8).write.mode("overwrite").parquet(f"{base}/fragmented")
     frag = spark.read.parquet(f"{base}/fragmented")
     frag.coalesce(1).write.mode("overwrite").parquet(f"{base}/compacted")
-    out = spark.read.parquet(f"{base}/compacted").orderBy("n_nationkey")
+    out = spark.read.parquet(f"{base}/compacted")
     return out.localCheckpoint(eager=True) if hasattr(out, "localCheckpoint") else out
 
 
@@ -536,7 +526,7 @@ def stream_foreach_sink(spark, sf_dir):
         for d in os.listdir(out_dir)
         if d.startswith("batch=")
     ]
-    res = spark.read.parquet(f"{out_dir}/batch={max(batches)}").orderBy("event_type")
+    res = spark.read.parquet(f"{out_dir}/batch={max(batches)}")
     return res.localCheckpoint(eager=True)
 
 
@@ -611,7 +601,6 @@ def snapshot_diff(spark, sf_dir):
             "c_custkey",
             "c_acctbal",
         )
-        .orderBy("change", "c_custkey")
     )
 
 
@@ -667,7 +656,6 @@ def merge_scd2(spark, sf_dir):
             F.row_number().over(w2).alias("version"),
             F.when(lead_t.isNull(), 1).otherwise(0).alias("is_current"),
         )
-        .orderBy("user_id", "version")
     )
 
 
@@ -709,7 +697,6 @@ def source_jsonl_import(spark, sf_dir):
                 F.expr("CAST(conv(substr(md5(text), 1, 8), 16, 10) AS BIGINT)")
             ).alias("text_fp"),
         )
-        .orderBy("source")
     )
 
 
@@ -809,7 +796,6 @@ def merge_cdc_apply(spark, sf_dir):
             .cast("long")
             .alias("acctbal_cents"),
         )
-        .orderBy("c_custkey")
     )
 
 
@@ -865,7 +851,6 @@ def sink_partition_overwrite(spark, sf_dir):
             .cast("long")
             .alias("n_even"),
         )
-        .orderBy("event_type")
     )
     res = spark.createDataFrame(
         out.collect(), "event_type string, cnt bigint, n_even bigint"
@@ -984,7 +969,6 @@ def sink_file_manifest(spark, sf_dir):
             F.min("o_orderkey").cast("long").alias("min_key"),
             F.max("o_orderkey").cast("long").alias("max_key"),
         )
-        .orderBy("bucket")
     )
     res = spark.createDataFrame(
         manifest.collect(),
@@ -1082,7 +1066,6 @@ def source_csv_malformed(spark, sf_dir):
             .cast("long")
             .alias("chars_good"),
         )
-        .orderBy("lang")
     )
     res = spark.createDataFrame(
         out.collect(),

@@ -1283,9 +1283,7 @@ def sink_table_log(spark, sf_dir):
             [(v, read_version(spark, base, v)) for v in (1, 2, 3)]
         )
         rows = [(v, *agg[v]) for v in (1, 2, 3)]
-        return spark.createDataFrame(
-            rows, "version int, n_rows bigint, cents bigint"
-        ).orderBy("version")
+        return spark.createDataFrame(rows, "version int, n_rows bigint, cents bigint")
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -1352,9 +1350,7 @@ def sink_table_log_checkpoint(spark, sf_dir):
         rows = [(v, *pre[v]) for v in (5, 7)] + [
             (v, *post[v]) for v in (10, 12)
         ]
-        return spark.createDataFrame(
-            rows, "version int, n_rows bigint, cents bigint"
-        ).orderBy("version")
+        return spark.createDataFrame(rows, "version int, n_rows bigint, cents bigint")
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -1430,7 +1426,7 @@ def sink_table_log_vacuum(spark, sf_dir):
             rows,
             "version int, n_rows bigint, cents bigint, "
             "age_guarded_deletes int, orphans_deleted int",
-        ).orderBy("version")
+        )
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -1535,7 +1531,7 @@ def sink_table_log_compact(spark, sf_dir):
             rows,
             "version int, n_rows bigint, cents bigint, "
             "files_shrunk boolean, gc_pruned_history boolean",
-        ).orderBy("version")
+        )
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -1689,7 +1685,7 @@ def sink_table_log_skipping(spark, sf_dir):
             rows,
             "probe int, n_rows bigint, cents bigint, "
             "files_opened int, files_pruned int, match_full boolean",
-        ).orderBy("probe")
+        )
     finally:
         shutil.rmtree(base, ignore_errors=True)
         shutil.rmtree(base2, ignore_errors=True)
@@ -1816,7 +1812,6 @@ def stream_table_log_sink(spark, sf_dir):
                 F.lit(versions).cast("int").alias("versions"),
                 F.lit(True).alias("replay_noop"),
             )
-            .orderBy("event_type")
             .localCheckpoint(eager=True)
         )
     finally:
@@ -1994,7 +1989,7 @@ def sink_table_log_compact_zorder(spark, sf_dir):
             [post, pre],
             "phase string, n_rows bigint, cents bigint, "
             "files_opened int, files_pruned int",
-        ).orderBy("phase")
+        )
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -2087,7 +2082,7 @@ def sink_table_log_changes(spark, sf_dir):
             rows,
             "win int, n_rows bigint, cents bigint, "
             "total_matches_snapshot boolean",
-        ).orderBy("win")
+        )
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -2329,7 +2324,6 @@ def stream_table_log_source(spark, sf_dir):
                 F.lit(2).cast("int").alias("phases"),
                 F.lit(True).alias("resumed_not_replayed"),
             )
-            .orderBy("event_type")
             .localCheckpoint(eager=True)
         )
     finally:
@@ -2465,7 +2459,7 @@ def sink_table_log_delete(spark, sf_dir):
             rows,
             "probe int, n_rows bigint, cents bigint, "
             "files_rewritten int, files_kept int, invariants_ok boolean",
-        ).orderBy("probe")
+        )
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -2634,6 +2628,6 @@ def sink_table_log_merge(spark, sf_dir):
             rows,
             "probe int, n_rows bigint, cents bigint, "
             "files_rewritten int, files_kept int, invariants_ok boolean",
-        ).orderBy("probe")
+        )
     finally:
         shutil.rmtree(base, ignore_errors=True)

@@ -55,7 +55,6 @@ def stream_tumbling(spark, sf_dir):
     return (
         ev.groupBy(F.date_trunc("hour", "ts").alias("win_start"), "event_type")
         .agg(F.count("*").alias("cnt"), F.round(F.sum("value"), 2).alias("sv"))
-        .orderBy("win_start", "event_type")
     )
 
 
@@ -75,7 +74,6 @@ def stream_sliding(spark, sf_dir):
         ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
         .agg(F.count("*").alias("cnt"))
         .select(F.col("w.start").alias("win_start"), "cnt")
-        .orderBy("win_start")
     )
 
 
@@ -102,7 +100,6 @@ def stream_session(spark, sf_dir):
     return (
         sessions.groupBy("user_id")
         .agg(F.count("*").alias("n_sessions"), F.sum("n").cast("long").alias("n_events"))
-        .orderBy("user_id")
     )
 
 
@@ -245,7 +242,6 @@ def stream_watermark_late(spark, sf_dir):
     return (
         sink.groupBy("win_start", "event_type")
         .agg(F.max("cnt").alias("cnt"))
-        .orderBy("win_start", "event_type")
     )
 
 
@@ -279,7 +275,7 @@ def stream_dedup(spark, sf_dir):
         )
 
     sink = _run_stream(spark, sf_dir, build, "append")
-    return sink.distinct().orderBy("user_id", "event_type")
+    return sink.distinct()
 
 
 @register(
@@ -307,7 +303,6 @@ def stream_stateful_count(spark, sf_dir):
     return (
         sink.groupBy("user_id")
         .agg(F.max("n_events").alias("n_events"))
-        .orderBy("user_id")
     )
 
 
@@ -379,7 +374,6 @@ def stream_custom_state(spark, sf_dir):
             F.max("n_events").alias("n_events"),
             F.round(F.max_by("sv_raw", "n_events"), 2).alias("sv"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -491,7 +485,6 @@ def stream_session_real(spark, sf_dir):
     return (
         sessions.groupBy("user_id")
         .agg(F.count("*").alias("n_sessions"), F.sum("n").cast("long").alias("n_events"))
-        .orderBy("user_id")
     )
 
 
@@ -557,7 +550,7 @@ def stream_xmatch_sphere(spark, sf_dir):
         )
 
     sink = _run_stream(spark, sf_dir, build, "append")
-    return sink.orderBy("l_id", "r_id")
+    return sink
 
 
 TOPK_K = 3  # event types reported per window
@@ -618,7 +611,6 @@ def stream_topk_windowed(spark, sf_dir):
         folded.withColumn("rk", rk.cast("int"))
         .filter(F.col("rk") <= TOPK_K)
         .select("win_start", "event_type", F.col("cnt").cast("long").alias("cnt"), "rk")
-        .orderBy("win_start", "rk")
     )
 
 
@@ -676,7 +668,6 @@ def stream_parquet_sink(spark, sf_dir):
             .cast("long")
             .alias("sum_milli"),
         )
-        .orderBy("event_type")
     )
     res = spark.createDataFrame(
         out.collect(), "event_type string, cnt bigint, sum_milli bigint"

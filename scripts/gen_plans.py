@@ -107,7 +107,7 @@ COMMENTARY = {
         "(<=10k labels; broadcast LocalRelation above); only a too-big "
         "quotient pays the checkpoint + degree-routed Pregel / "
         "large-star-small-star loops. The tree below is the returned "
-        "labeling (cache scan + map projection + sort).",
+        "labeling (cache scan + map projection).",
     ),
 }
 
@@ -129,16 +129,15 @@ first-agg dedups multi-band hits before the hamming<=2 refine.
 Plan skeleton (sf-independent):
 
 ```
-Sort <- Exchange(range)
-  <- Filter (hamming <= 2)
-    <- HashAggregate(final, first(hamming))
-      <- Exchange(hash doc_a, doc_b)
-        <- HashAggregate(partial)
-          <- Project [xor + bit_count]          <- the refine
-            <- BroadcastHashJoin [j, bk]        <- band equi-join
-               (both sides: Generate explode(4 bands)
-                  <- Project [simhash map-side]
-                    <- Scan parquet documents)
+Filter (hamming <= 2)
+  <- HashAggregate(final, first(hamming))
+    <- Exchange(hash doc_a, doc_b)
+      <- HashAggregate(partial)
+        <- Project [xor + bit_count]          <- the refine
+          <- BroadcastHashJoin [j, bk]        <- band equi-join
+             (both sides: Generate explode(4 bands)
+                <- Project [simhash map-side]
+                  <- Scan parquet documents)
 ```
 
 At 100 TB the band join becomes a ShuffledHashJoin on (j, bk) —

@@ -62,11 +62,16 @@ def test_cli_xmatch2d_and_decontaminate(capsys, spark):
     main(["xmatch2d", "--db", "/root/testdata/sf0.001"], spark=spark)
     out = capsys.readouterr().out.strip().splitlines()
     assert all(len(ln.split("\t")) == 3 for ln in out)  # l_id, r_id, dist
+    # ops return unordered rows; the terminal print orders them
+    rows = [(int(a), int(b), float(d)) for a, b, d in (ln.split("\t") for ln in out)]
+    assert rows and rows == sorted(rows)
 
     main(["decontaminate", "--db", "/root/testdata/sf0.001"], spark=spark)
     out = capsys.readouterr().out.strip()
     # 0+ contaminated rows, each (doc_id, n_hits)
     assert all(len(ln.split("\t")) == 2 for ln in out.splitlines() if ln)
+    rows = [tuple(map(int, ln.split("\t"))) for ln in out.splitlines() if ln]
+    assert rows == sorted(rows)
 
 
 def test_cli_import_stamp_id(spark, tmp_path, capsys):

@@ -111,9 +111,13 @@ def test_split_stratified_partitions_corpus(spark):
     shares = out.groupby("split").n_docs.sum() / len(docs)
     assert 0.70 <= shares["train"] <= 0.90
     assert shares.get("val", 0) > 0 and shares.get("test", 0) > 0
-    # deterministic: a second build returns identical rows
+    # deterministic: a second build returns identical rows (in any order)
     again = QUERIES["llm_split_stratified"](spark, SF_DIR).toPandas()
-    pd.testing.assert_frame_equal(out, again)
+
+    def rows(df):
+        return df.sort_values(list(df.columns)).reset_index(drop=True)
+
+    pd.testing.assert_frame_equal(rows(out), rows(again))
 
 
 def test_embed_quantize_recomputes_in_numpy(spark):

@@ -61,6 +61,11 @@ def test_no_plan_regresses_past_its_ratchet(spark):
     ceilings. Collected into one failure report so a multi-op
     regression shows up whole.
 
+    The same pass guards the output-order policy: builders return
+    unordered frames, so no plan may contain the range exchange of a
+    global sort (top-k `orderBy().limit()` plans as
+    TakeOrderedAndProject and has none).
+
     Session state is normalized first: earlier tests persist()
     tables, and cached-relation statistics flip join strategies
     (SMJ <-> BHJ changes the Exchange count), so without the reset
@@ -72,19 +77,22 @@ def test_no_plan_regresses_past_its_ratchet(spark):
 
     spark.catalog.clearCache()
     clear_plan_cache()
-    bad = []
+    bad, ranged = [], []
     for name, rec in sorted(RATCHET.items()):
         if name not in QUERIES:  # retired op, stale file
             continue
         p = _plan(QUERIES[name](spark, SF))
         exch = p.count("Exchange")
         scans = p.count("Scan parquet")
+        if "rangepartitioning" in p:
+            ranged.append(name)
         if exch > rec["exch"] or scans > rec["scans"]:
             bad.append(
                 f"{name}: exch {exch} (ratchet {rec['exch']}), "
                 f"scans {scans} (ratchet {rec['scans']})"
             )
     assert not bad, "plan regressions:\n" + "\n".join(bad)
+    assert not ranged, f"plans with a global-sort range exchange: {ranged}"
 
 
 @pytest.mark.parametrize(

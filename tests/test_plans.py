@@ -467,8 +467,7 @@ def test_region_cone_scan_prunes_to_candidate_zones(spark):
     """A cone footprint over the zone-partitioned layout must compile
     to (a) a PartitionFilters z-IN list covering exactly the
     candidate zones — directory pruning before any byte is read —
-    and (b) a map-only plan: no join, no shuffle except the final
-    presentation sort."""
+    and (b) a map-only plan: no join, no shuffle."""
     from lsd_spark.plans.region import CONE
 
     p = qplan("filter_region_cone", spark)
@@ -483,8 +482,8 @@ def test_region_cone_scan_prunes_to_candidate_zones(spark):
     assert got == zones, (got, zones)
     # candidate zones are a small fraction of the 180-zone sky
     assert len(zones) < 20
-    # map-only: the one Exchange is the orderBy's range partitioning
-    assert p.count("Exchange") <= 2, p  # formatted lists it twice max
+    # map-only: no exchange at all
+    assert "Exchange" not in p, p
     assert "Join" not in p, p
 
 
@@ -524,8 +523,7 @@ def test_per_object_kernels_single_exchange(spark):
         # "== Initial Plan ==" repeating every node — count only the
         # final plan section
         body = p.split("== Initial Plan ==")[0]
-        # exchanges: one hashpartitioning on user_id + the final
-        # presentation rangepartitioning sort — nothing else
+        # exchanges: one hashpartitioning on user_id — nothing else
         n_hash = body.count("hashpartitioning")
         assert n_hash == 1, f"{q}: {n_hash} hash exchanges\n{p}"
 
@@ -564,8 +562,9 @@ def test_region_healpix_binds_derived_coords_once(spark):
     p = qplan("filter_region_healpix", spark)
     assert p.count("md5") <= 8, f"md5 x{p.count('md5')} in plan"
     assert "aggregate(" in p or "Join" not in p, p
-    # still map-only: no join, at most the presentation sort exchange
+    # still map-only: no join, no exchange
     assert "Join" not in p, p
+    assert "Exchange" not in p, p
 
 
 def test_healpix_projection_family_binds_trig_once(spark):
@@ -727,20 +726,19 @@ def test_survey_ingest_is_broadcast_then_one_agg_exchange(spark):
     """The import pipeline's 100 TB contract: detections never
     shuffle for the WCS join (exposure solutions broadcast), the
     TAN transform + pixel key is map-side, and the only exchanges
-    are the layout-key aggregation (partial+final) and the
-    presentation sort."""
+    are the layout-key aggregation (partial+final)."""
     p = qplan("pipeline_survey_ingest", spark)
     assert "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" not in p, p
     assert "BroadcastHashJoin" in p, p
     assert "SortMergeJoin" not in p, p
     assert "partial_count" in p or "HashAggregate" in p, p
-    # exchanges: broadcast (listed), agg hash partitioning, order-by
-    # range partitioning -- no detection-side pre-join shuffle
+    # exchanges: broadcast (listed) and the agg hash partitioning --
+    # no detection-side pre-join shuffle
     shuffles = [
         ln for ln in p.splitlines()
         if "Exchange" in ln and "Broadcast" not in ln
     ]
-    assert len(shuffles) <= 4, p  # formatted mode lists nodes twice
+    assert len(shuffles) <= 2, p  # formatted mode lists nodes twice
 
 
 def test_density_adaptive_build_plan_shape(spark):

@@ -13,6 +13,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from lsd_spark.catalog import load
+from lsd_spark.functions import array_sql
 from lsd_spark.registry import register
 
 
@@ -481,7 +482,7 @@ def period_search_plan(obs, period_days=None, n_bins: int = _PERIOD_NB):
         "us",
         "v",
         F.explode(
-            F.array(*[F.lit(d * 86400 * 1_000_000) for d in period_days])
+            F.expr(array_sql([d * 86400 * 1_000_000 for d in period_days]))
         ).alias("p_us"),
     )
     pb = F.floor((F.col("us") % F.col("p_us")) * n_bins / F.col("p_us"))

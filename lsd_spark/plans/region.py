@@ -21,7 +21,18 @@ Two-phase compile, the LSD cell-walk re-expressed for Spark:
    every region operator keep a full hash-match oracle (the oracle
    is the refine alone, brute-forced over all rows: a physically
    different plan that agrees iff the candidate cell set truly is a
-   superset).
+   superset). Both phases reach the JVM as ONE filter text, one py4j
+   call whatever the region's size. The cell test and the refine
+   read ra/dec through a lambda binding, so a derived ra/dec is
+   computed once per row rather than once per reference. Lambdas run
+   interpreted, so the region's literals stay out of the generated
+   code: a fetch of a new region reuses the compiled classes of the
+   last one. A zone test stays outside the lambda: over the zone
+   layout a plain `z IN (...)`, because Spark prunes directories
+   only on a predicate it can see over the partition column; over
+   derived ra/dec a compiled `array_contains` on an array literal,
+   which drops rows outside the region's dec band before the slower
+   interpreted lambda runs.
 
 Superset bound for the cone's per-zone RA half-width: from the
 haversine identity hav(r) = hav(Δdec) + cos d0 cos d1 hav(Δra) ≥
@@ -49,6 +60,7 @@ import os
 from pyspark.sql import functions as F
 
 from lsd_spark.catalog import load
+from lsd_spark.functions import array_sql
 from lsd_spark.plans.sphere import (
     DIST_SPHERE,
     _sphere_points_sql,
@@ -245,36 +257,73 @@ class _Difference(Region):
 # --- query compilation ----------------------------------------------------
 
 
+def _bind_once(fields: dict[str, str], body: str) -> str:
+    """A predicate that evaluates each of `fields` ONCE per row and
+    reads them in `body` as ``p.<name>``.
+
+    Predicate pushdown substitutes a derived column into every
+    reference inside a pushed predicate, so a filter naming a
+    derived ra/dec N times runs its md5 derivation N times per row.
+    A higher-order function evaluates its array argument once, so
+    ``exists(array(named_struct(...)), p -> body)`` is a
+    let-binding: the fields are derived once, and `body` touches
+    only the cheap lambda-struct fields. Higher-order functions run
+    interpreted, so the literals in `body` stay out of the generated
+    Java: a new region reuses the compiled class instead of
+    compiling its own."""
+    struct = ", ".join(f"'{k}', {v}" for k, v in fields.items())
+    return f"exists(array(named_struct({struct})), p -> {body})"
+
+
+def _zone_sql(dec: str) -> str:
+    """Dec zone of the region grid; engine-neutral text."""
+    return f"CAST(LEAST(FLOOR(({dec} + 90.0) / {GRID}), {_NZ - 1}) AS INT)"
+
+
+def _bucket_sql(ra: str, z: str) -> str:
+    """cos(dec)-scaled RA bucket within zone `z`."""
+    return f"CAST(FLOOR({ra} * element_at({array_sql(_NB)}, {z} + 1) / 360.0) AS INT)"
+
+
 def region_select(pts, region: Region, keep_all: bool = False):
-    """Compile `region` over a (event_id, ra, dec[, z, b]) DataFrame:
-    candidate-cell membership first (map-only, literal IN list), then
-    the exact refine. When z/b are absent they are derived on the fly
-    with the same literal grid. ``keep_all=True`` preserves every
-    input column (the api.py ``fetch(bounds=...)`` path, where the
-    query's projection is the user's business)."""
-    in_cols = list(pts.columns)
-    derived = "z" not in pts.columns
-    if derived:
-        nb_arr = F.array(*[F.lit(v) for v in _NB])
-        z = F.least(F.floor((F.col("dec") + F.lit(90.0)) / F.lit(GRID)), F.lit(_NZ - 1)).cast(
-            "int"
-        )
-        pts = pts.withColumn("z", z).withColumn(
-            "b",
-            F.floor(F.col("ra") * F.element_at(nb_arr, F.col("z") + 1) / F.lit(360.0)).cast(
-                "int"
-            ),
-        )
+    """Compile `region` over a DataFrame with ra/dec columns
+    (event_id, ra, dec[, z, b]) into ONE filter, sent to the JVM as
+    one SQL text: one py4j call, however many cells the region has.
+    Its conjuncts, cheapest first:
+
+    - The zone test. Over the zone layout it is a plain
+      ``z IN (...)``, because Spark prunes partition directories only
+      on a predicate over the partition column itself. Over derived
+      ra/dec it is ``array_contains(<zones>, <zone of dec>)``:
+      compiled code that drops rows outside the region's dec band for
+      one derivation of dec. Generated code reads an array literal by
+      reference instead of inlining it, so every region shares the
+      class.
+    - The cell test (the row's (zone, bucket) id IN the candidate
+      cells, on the same literal grid) and the exact refine. They
+      read ra/dec through `_bind_once`, so a derived ra/dec is
+      computed once per row, not once per reference. Lambdas run
+      interpreted, so the region's literals stay out of the generated
+      code, and a repeat fetch compiles nothing.
+
+    ``keep_all=True`` preserves every input column (the api.py
+    ``fetch(bounds=...)`` path, where the query's projection is the
+    user's business)."""
     cells = sorted(region.cells())
     zones = sorted({z for z, _ in cells})
-    cids = [z * _CID + b for z, b in cells]
-    out = (
-        pts.filter(F.col("z").isin(zones))  # partition-prunable
-        .filter((F.col("z") * _CID + F.col("b")).isin(cids))
-        .filter(F.expr(region.refine_sql("ra", "dec")))
+    cids = ", ".join(str(z * _CID + b) for z, b in cells)
+    cell_id = f"{_zone_sql('p.dec')} * {_CID} + {_bucket_sql('p.ra', _zone_sql('p.dec'))}"
+    member = _bind_once(
+        {"ra": "ra", "dec": "dec"},
+        f"{cell_id} IN ({cids}) AND {region.refine_sql('p.ra', 'p.dec')}",
     )
+    if "z" in pts.columns:
+        zone_test = f"z IN ({', '.join(map(str, zones))})"
+    else:
+        zone_test = f"array_contains({array_sql(zones)}, {_zone_sql('dec')})"
+    out = pts.filter(f"{zone_test} AND {member}" if cells else "false")
     if keep_all:
-        return out.select(*in_cols)
+        return out
     return out.select("event_id", "ra", "dec")
 
 
@@ -288,16 +337,10 @@ def build_region_layout(spark, sf_dir: str) -> str:
     from lsd_spark.plans.materialize import materialized
 
     def build(base: str) -> str:
-        nb_arr = F.array(*[F.lit(v) for v in _NB])
-        pts = sphere_points(spark, sf_dir, None)
-        z = F.least(
-            F.floor((F.col("dec") + F.lit(90.0)) / F.lit(GRID)), F.lit(_NZ - 1)
-        ).cast("int")
-        pts = pts.withColumn("z", z).withColumn(
-            "b",
-            F.floor(
-                F.col("ra") * F.element_at(nb_arr, F.col("z") + 1) / F.lit(360.0)
-            ).cast("int"),
+        pts = (
+            sphere_points(spark, sf_dir, None)
+            .withColumn("z", F.expr(_zone_sql("dec")))
+            .withColumn("b", F.expr(_bucket_sql("ra", "z")))
         )
         path = os.path.join(base, "sky")
         # one file per zone dir at test scale (repartition by the
@@ -449,11 +492,9 @@ def filter_region_healpix(spark, sf_dir):
     the refine alone, brute-forced — agrees iff the covering is a
     true superset.
 
-    The membership predicate is a single `aggregate(array(struct),
-    false, (acc, p) -> …)` let-binding rather than a filter over
-    derived ra/dec columns: predicate pushdown substitutes a derived
-    column into every reference inside the pushed predicate, and the
-    pixel formula references its inputs ~15 times each — the naive
+    The membership predicate is one `_bind_once` let-binding rather
+    than a filter over derived ra/dec columns: the pixel formula
+    references its inputs ~15 times each, and the naive
     `withColumn + filter` plan executed 67 md5 derivations per row
     (150 s over the 100x sky dir vs 25 s for this shape; round-10
     profile). The lambda binds ra/dec/z/tt ONCE per row; the body
@@ -471,14 +512,14 @@ def filter_region_healpix(spark, sf_dir):
     )
     pix_list = ", ".join(str(p) for p in pix)
     body = healpix_ring_zt_sql("p.z", "p.tt", HPX_NSIDE)
-    member = F.expr(
-        "aggregate(array(named_struct("
-        f"'ra', {RA_SPARK_SQL}, 'dec', {DEC_SPARK_SQL}, "
-        f"'z', sin(radians({DEC_SPARK_SQL})), "
-        f"'tt', ((({RA_SPARK_SQL} % 360.0 + 360.0) % 360.0) / 90.0 % 4.0)"
-        ")), false, "
-        f"(acc, p) -> ({body}) IN ({pix_list}) "
-        f"AND ({HPX_CONE.refine_sql('p.ra', 'p.dec')}))"
+    member = _bind_once(
+        {
+            "ra": RA_SPARK_SQL,
+            "dec": DEC_SPARK_SQL,
+            "z": f"sin(radians({DEC_SPARK_SQL}))",
+            "tt": f"((({RA_SPARK_SQL} % 360.0 + 360.0) % 360.0) / 90.0 % 4.0)",
+        },
+        f"({body}) IN ({pix_list}) AND ({HPX_CONE.refine_sql('p.ra', 'p.dec')})",
     )
     ev = load(spark, sf_dir, "events")
     return (
@@ -624,7 +665,7 @@ def join_point_in_polygon(spark, sf_dir):
 
 TARGET_MOD = 9973  # deterministic rare target list: event_id % mod == 0
 
-_Z_SQL = f"CAST(LEAST(FLOOR((dec + 90.0) / {GRID}), {_NZ - 1}) AS INT)"
+_Z_SQL = _zone_sql("dec")
 
 
 @register(

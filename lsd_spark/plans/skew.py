@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lsd_spark.catalog import load
+from lsd_spark.functions import array_sql
 from lsd_spark.registry import register
 
 SALT = 8
@@ -41,7 +42,7 @@ def salted_join(
     f = fact.withColumn(
         "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in fact.columns]), F.lit(salt))
     )
-    d = dim.withColumn("_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)])))
+    d = dim.withColumn("_salt", F.explode(F.expr(array_sql(range(salt)))))
     out = f.join(d, (F.col(fact_key) == F.col(dim_key)) & (f._salt == d._salt), how)
     return out.drop("_salt")
 

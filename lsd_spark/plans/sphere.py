@@ -55,6 +55,7 @@ import math
 from pyspark.sql import DataFrame, Window, functions as F
 
 from lsd_spark.catalog import load
+from lsd_spark.functions import array_sql
 from lsd_spark.registry import register
 from lsd_spark.sizing import cpu_join_inputs, shuffle_width, spread
 
@@ -174,7 +175,7 @@ def sphere_xmatch(
     instead of post-filtering the distance refine."""
     nb = zone_counts(radius)
     nz = len(nb)
-    nb_arr = F.array(*[F.lit(v) for v in nb])
+    nb_arr = F.expr(array_sql(nb))
     # Per-zone SALT factors (round 14, guide §2.5 hot keys): a zone
     # with few RA buckets concentrates its whole dec band into a
     # handful of cells — at the 10x stress dir the six nb(z)=1 polar
@@ -196,7 +197,7 @@ def sphere_xmatch(
     # couple-million candidate pairs over 32 shards is already
     # equatorial-cell-sized per task
     salt_f = [max(1, min(32, nb_mid // v)) for v in nb]
-    salt_arr = F.array(*[F.lit(v) for v in salt_f])
+    salt_arr = F.expr(array_sql(salt_f))
 
     def zone_of(dec):
         return F.least(F.floor((dec + F.lit(90.0)) / F.lit(radius)), F.lit(nz - 1)).cast(
@@ -599,7 +600,7 @@ def agg_density_sphere(spark, sf_dir):
     oracle (no cross-engine trig in keys)."""
     nb = zone_counts(R_SPHERE)
     nz = len(nb)
-    nb_arr = F.array(*[F.lit(v) for v in nb])
+    nb_arr = F.expr(array_sql(nb))
     pts = sphere_points(spark, sf_dir, None)
     z = F.least(F.floor((F.col("dec") + F.lit(90.0)) / F.lit(R_SPHERE)), F.lit(nz - 1)).cast(
         "int"
@@ -708,8 +709,8 @@ def build_margin_sphere(spark, sf_dir: str) -> str:
 def _write_margin_sphere(spark, sf_dir: str, base: str) -> str:
     nb, dra = _margin_geometry()
     nz = len(nb)
-    nb_arr = F.array(*[F.lit(v) for v in nb])
-    dra_arr = F.array(*[F.lit(v) for v in dra])
+    nb_arr = F.expr(array_sql(nb))
+    dra_arr = F.expr(array_sql(dra))
     cell = W_MARGIN
     r = sphere_points(spark, sf_dir, "click").select(
         F.col("event_id").alias("r_id"),
@@ -799,7 +800,7 @@ def join_xmatch_sphere_margin(spark, sf_dir):
     margin = spark.read.parquet(path)
     nb, _ = _margin_geometry()
     nz = len(nb)
-    nb_arr = F.array(*[F.lit(v) for v in nb])
+    nb_arr = F.expr(array_sql(nb))
     l = sphere_points(spark, sf_dir, "purchase").select(
         F.col("event_id").alias("l_id"),
         F.col("ra").alias("lra"),

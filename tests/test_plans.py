@@ -548,6 +548,22 @@ def test_region_time_pushes_epoch_range_to_scan(spark):
     ), p
 
 
+def test_array_sql_matches_lit_array(spark):
+    """array_sql's one-call text must build the array a per-element
+    F.lit array builds: same element type (int, int widened to
+    bigint, double) and same values, so swapping one for the other
+    leaves every plan that uses it unchanged."""
+    from pyspark.sql import functions as F
+
+    from lsd_spark.functions import array_sql
+
+    for xs in ([1, 6, 179], [3, 5_000_000_000], [0.5, 1e-09, -2.0]):
+        got = spark.range(1).select(F.expr(array_sql(xs)).alias("a"))
+        want = spark.range(1).select(F.array(*[F.lit(v) for v in xs]).alias("a"))
+        assert got.schema == want.schema, xs
+        assert got.collect() == want.collect(), xs
+
+
 def test_region_healpix_binds_derived_coords_once(spark):
     """filter_region_healpix's membership must let-bind the derived
     ra/dec (HOF lambda) instead of filtering on derived columns:

@@ -312,7 +312,8 @@ def region_select(pts, region: Region, keep_all: bool = False):
     cells = sorted(region.cells())
     zones = sorted({z for z, _ in cells})
     cids = ", ".join(str(z * _CID + b) for z, b in cells)
-    cell_id = f"{_zone_sql('p.dec')} * {_CID} + {_bucket_sql('p.ra', _zone_sql('p.dec'))}"
+    pz = _zone_sql("p.dec")
+    cell_id = f"{pz} * {_CID} + {_bucket_sql('p.ra', pz)}"
     member = _bind_once(
         {"ra": "ra", "dec": "dec"},
         f"{cell_id} IN ({cids}) AND {region.refine_sql('p.ra', 'p.dec')}",

@@ -74,8 +74,10 @@ HEADLINE = {
 # engine's prepared-statement feature (BASELINE.md methodology:
 # plans prepared, each run executes a fresh alias of them), and a
 # bare "simhash" substring also matched the llm_dedup_simhash plan
-# key, silently re-billing ~5 s of Catalyst analysis of the 60-term
-# signature expression to every timed run.
+# key, re-planning the op inside every timed run. That re-plan is a
+# small share of the run: at sf0.1 on 4 cores, planning the 60-term
+# signature expression measured 0.18-0.28 s against 5.2-7.0 s of
+# execution, which is where the op's time goes.
 RESET_BEFORE_RUN = {
     "q_dedup_minhash": ["ckpt:minhash", "ckpt:text_"],
     "q_dedup_simhash": ["ckpt:simhash", "ckpt:text_"],

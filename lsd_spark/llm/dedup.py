@@ -10,12 +10,27 @@
   (SURVEY.md §2.C design note): candidate generation is an equi
   join, never a cross product, so it scales linearly with collision
   count, not quadratically with corpus size.
+
+Two helpers hold the decisions every banded dedup shares:
+
+- `band_pairs` is the one banded self-join. It applies the exact
+  refine BEFORE it dedups the candidate pairs, and it dedups on the
+  pair keys plus the score, never on array payloads. That order is
+  exact because every refine here (hamming, Jaccard) is a pure
+  function of the pair.
+- `expand_collapsed` is the one undirected collapse-identical-first
+  expansion: representative pairs fan out through the membership
+  map, and each text group's own member pairs carry the group's
+  payload. (Containment is directed and expands on its own.)
 """
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
+
 from pyspark import StorageLevel
-from pyspark.sql import Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from lsd_spark.catalog import load
@@ -188,6 +203,67 @@ def text_mem(spark, sf_dir):
     )
 
 
+def band_pairs(bands, keys, pair, id_col="doc_id", score=None, keep=None):
+    """The banded candidate-pair builder of every LSH dedup: the
+    self-equi-join of `bands` on `keys` with a.id < b.id, projected
+    to the `pair` names plus `score` (output name -> expression over
+    the a./b. aliases), filtered by the exact refine `keep`, then
+    deduplicated — a pair colliding in k bands arrives k times.
+
+    The refine runs before the dedup, and the dedup sees only the
+    pair keys and the score. Both are exact because each score is a
+    pure function of the pair, so the k copies score alike. That way
+    the dedup shuffles the refine's survivors, not every collision,
+    and never an array payload. A caller whose refine inputs are
+    large passes no score and joins its payload back onto the
+    deduplicated keys."""
+    a, b = bands.alias("a"), bands.alias("b")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    on.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    pairs = a.join(b, reduce(and_, on)).select(
+        F.col(f"a.{id_col}").alias(pair[0]),
+        F.col(f"b.{id_col}").alias(pair[1]),
+        *[e.alias(n) for n, e in (score or {}).items()],
+    )
+    if keep is not None:
+        pairs = pairs.filter(keep)
+    return pairs.distinct()
+
+
+def expand_collapsed(rep_pairs, mem, within, pair=("doc_a", "doc_b")):
+    """The undirected collapse-identical-first expansion.
+
+    `rep_pairs` is (rep_a, rep_b, *payload) over group representatives
+    and `mem` the (member, rep) membership map, both by position. A
+    surviving rep pair expands to every member pair across its two
+    groups, ordered with least/greatest. Each group's own members
+    pair up (a < b) and carry `within`: a dict of constant payload
+    columns, or a (g, *payload) frame keyed by the rep id `g`. The
+    frame is inner-joined, so a group missing from it emits no
+    within-group pairs."""
+    ga, gb, *payload = rep_pairs.columns
+    member, rep = mem.columns
+    ma = mem.select(F.col(member).alias("va"), F.col(rep).alias(ga))
+    mb = mem.select(F.col(member).alias("vb"), F.col(rep).alias(gb))
+    cross = rep_pairs.join(ma, ga).join(mb, gb).select(
+        F.least("va", "vb").alias(pair[0]),
+        F.greatest("va", "vb").alias(pair[1]),
+        *payload,
+    )
+    same = (
+        mem.select(F.col(member).alias("va"), F.col(rep).alias("g"))
+        .join(mem.select(F.col(member).alias("vb"), F.col(rep).alias("g")), "g")
+        .filter(F.col("va") < F.col("vb"))
+    )
+    if isinstance(within, DataFrame):
+        same = same.join(within, "g")
+    else:
+        same = same.select("va", "vb", *[c.alias(n) for n, c in within.items()])
+    return cross.unionByName(
+        same.select(F.col("va").alias(pair[0]), F.col("vb").alias(pair[1]), *payload)
+    )
+
+
 def minhash_signature(shingles_col):
     """H independent minhashes via xxhash64(shingle, seed) — fixed
     seeds 0..H-1, fully deterministic, JVM-side."""
@@ -228,28 +304,13 @@ def llm_dedup_near(spark, sf_dir):
             )
         ).alias("bk"),
     ).select("doc_id", "shingles", "bk.band", "bk.bh")
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.shingles").alias("sh_a"),
-            F.col("b.shingles").alias("sh_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
+    jac = F.size(F.array_intersect("a.shingles", "b.shingles")) / F.size(
+        F.array_union("a.shingles", "b.shingles")
     )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(F.array_union("sh_a", "sh_b"))
-    return (
-        cand.withColumn("jaccard", F.round(jac.cast("double"), 4))
-        .filter(F.col("jaccard") >= JACCARD_T)
-        .select("doc_a", "doc_b", "jaccard")
+    return band_pairs(
+        bands, ["band", "bh"], ("doc_a", "doc_b"),
+        score={"jaccard": F.round(jac.cast("double"), 4)},
+        keep=F.col("jaccard") >= JACCARD_T,
     )
 
 
@@ -320,21 +381,10 @@ def _simhash_banded(frame):
         "simhash",
         "explode(array(0, 1, 2, 3)) AS j",
     ).selectExpr("doc_id", "simhash", "j", "(shiftright(simhash, 15 * j) & 32767) AS bk")
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.j") == F.col("b.j"))
-            & (F.col("a.bk") == F.col("b.bk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("lo"),
-            F.col("b.doc_id").alias("hi"),
-            F.bit_count(F.expr("a.simhash ^ b.simhash")).cast("long").alias("hamming"),
-        )
-        .dropDuplicates(["lo", "hi"])
-        .filter(F.col("hamming") <= HAM_T)
+    return band_pairs(
+        bands, ["j", "bk"], ("lo", "hi"),
+        score={"hamming": F.bit_count(F.expr("a.simhash ^ b.simhash")).cast("long")},
+        keep=F.col("hamming") <= HAM_T,
     )
 
 
@@ -374,24 +424,9 @@ def _simhash_collapsed(spark, sf_dir):
         spark, sf_dir, "simhash_sig",
         lambda: _simhash_signatures(rdocs),
     )
-    rep_pairs = _simhash_banded(rsh)
-    ma = mem.select(F.col("doc_id").alias("va"), F.col("rid").alias("lo"))
-    mb = mem.select(F.col("doc_id").alias("vb"), F.col("rid").alias("hi"))
-    cross = rep_pairs.join(ma, "lo").join(mb, "hi").select(
-        F.least("va", "vb").alias("doc_a"),
-        F.greatest("va", "vb").alias("doc_b"),
-        "hamming",
+    return expand_collapsed(
+        _simhash_banded(rsh), mem, {"hamming": F.lit(0).cast("long")}
     )
-    within = (
-        mem.select(F.col("doc_id").alias("doc_a"), F.col("rid").alias("g"))
-        .join(
-            mem.select(F.col("doc_id").alias("doc_b"), F.col("rid").alias("g")),
-            "g",
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", F.lit(0).cast("long").alias("hamming"))
-    )
-    return cross.unionByName(within)
 
 
 @register("llm_dedup_simhash", oracle=_SIMHASH_ORACLE)
@@ -667,31 +702,13 @@ def llm_dedup_ngram(spark, sf_dir):
         .filter(F.col("jaccard") >= NGRAM_T)
         .select("ga", "gb", "jaccard")
     )
-    ma = mem.select(F.col("doc_id").alias("va"), F.col("rid").alias("ga"))
-    mb = mem.select(F.col("doc_id").alias("vb"), F.col("rid").alias("gb"))
-    cross = (
-        rp.join(ma, "ga")
-        .join(mb, "gb")
-        .select(
-            F.least("va", "vb").alias("doc_a"),
-            F.greatest("va", "vb").alias("doc_b"),
-            "jaccard",
-        )
-    )
     # gjac is one row per distinct text with a surviving shingle —
     # group-sized, so shuffle equi-join (no broadcast hint)
     gjac = sz_sh.select(
         F.col("doc_id").alias("g"),
         F.round(F.col("c") / (F.col("c") + F.col("c") - F.col("c")), 4).alias("jaccard"),
     )
-    within = (
-        mem.select(F.col("doc_id").alias("va"), F.col("rid").alias("g"))
-        .join(mem.select(F.col("doc_id").alias("vb"), F.col("rid").alias("g")), "g")
-        .filter(F.col("va") < F.col("vb"))
-        .join(gjac, "g")
-        .select(F.col("va").alias("doc_a"), F.col("vb").alias("doc_b"), "jaccard")
-    )
-    return cross.unionByName(within)
+    return expand_collapsed(rp, mem, gjac)
 
 
 CONTAIN_T = 0.8
@@ -858,45 +875,12 @@ _EMBCOS_ORACLE = (
 EMBCOS_NPROBE = 2
 
 
-def embcos_candidate_pairs(spark, sf_dir):
-    """IVF-bucketed candidate pairs for semantic dedup: assign every
-    vector to its EMBCOS_NPROBE nearest centroids, self-equi-join on
-    centroid_id (vec_a < vec_b), dedupe pairs seen in two shared
-    buckets, refine with the true cosine. Returns
-    (vec_a, vec_b, sim) for ALL candidate pairs (unfiltered).
-
-    Scale: the join is equi on centroid_id — per-bucket work is
-    O(sum of bucket_size^2) instead of corpus^2, and buckets are
-    individually shuffle-partitionable. This is the same shape as
-    knn_ivf's probe join and LSD's cell-bounded xmatch candidates."""
-    from lsd_spark.llm.simsearch import ivf_assignments
-
-    emb = load(spark, sf_dir, "embeddings")
-    assign = ivf_assignments(emb, EMBCOS_NPROBE)
-    a = assign.alias("a")
-    b = assign.alias("b")
-    sim = F.round(F.expr(COS_SPARK.format(a="e_a", b="e_b")), 6)
-    return (
-        a.join(
-            b,
-            (F.col("a.centroid_id") == F.col("b.centroid_id"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            F.col("a.embedding").alias("e_a"),
-            F.col("b.embedding").alias("e_b"),
-        )
-        .dropDuplicates(["vec_a", "vec_b"])
-        .select("vec_a", "vec_b", sim.alias("sim"))
-    )
-
-
 def embcos_near_pairs(spark, sf_dir):
-    """(vec_a, vec_b, sim) with sim >= EMBCOS_T — bit-identical to
-    ``embcos_candidate_pairs(...).filter(sim >= EMBCOS_T)`` (every
-    consumer's shape), computed COLLAPSE-IDENTICAL-FIRST: group
+    """(vec_a, vec_b, sim) with sim >= EMBCOS_T — bit-identical to the
+    naive bucket join over every vector (the reference plan
+    ``_naive_embcos_pairs`` in tests/test_collapse_equivalence.py,
+    which embcos_candidate_pairs_sql mirrors in DuckDB), computed
+    COLLAPSE-IDENTICAL-FIRST: group
     vectors by an embedding fingerprint, run the IVF bucket join and
     the cosine refine over one REPRESENTATIVE per group, filter at
     the threshold, then expand the surviving pairs back through the
@@ -962,7 +946,7 @@ def _embcos_near_pairs_build(spark, sf_dir):
     # an embedding, the collapse drops the higher id and the rep-set
     # centroids (hence candidate pairs) diverge from the naive plan
     # and the oracle. Full-table centroids restore unconditional
-    # bit-identity with embcos_candidate_pairs.
+    # bit-identity with the naive bucket join.
     cent = emb.filter(F.col("vec_id") < N_CENTROIDS).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_emb")
     )
@@ -972,16 +956,7 @@ def _embcos_near_pairs_build(spark, sf_dir):
             reps, EMBCOS_NPROBE, centroids=cent
         ).drop("embedding"),
     )
-    a, b = assign.alias("a"), assign.alias("b")
-    rp_ids = (
-        a.join(
-            b,
-            (F.col("a.centroid_id") == F.col("b.centroid_id"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("ga"), F.col("b.vec_id").alias("gb"))
-        .dropDuplicates(["ga", "gb"])
-    )
+    rp_ids = band_pairs(assign, ["centroid_id"], ("ga", "gb"), id_col="vec_id")
     # reps is one row per DISTINCT payload — corpus-sized on a
     # low-duplication corpus, so these are shuffle equi-joins too.
     # Norms are computed ONCE per representative here and joined
@@ -1011,40 +986,22 @@ def _embcos_near_pairs_build(spark, sf_dir):
         .select("ga", "gb", sim.alias("sim"))
         .filter(F.col("sim") >= EMBCOS_T)
     )
-    ma = mem.select(F.col("vec_id").alias("va"), F.col("rvid").alias("ga"))
-    mb = mem.select(F.col("vec_id").alias("vb"), F.col("rvid").alias("gb"))
-    cross = (
-        rp.join(ma, "ga")
-        .join(mb, "gb")
-        .select(
-            F.least("va", "vb").alias("vec_a"),
-            F.greatest("va", "vb").alias("vec_b"),
-            "sim",
-        )
-    )
     selfsim = F.round(F.expr(COS_SPARK.format(a="r_emb", b="r_emb")), 6)
-    gsim = groups.select(F.col("rvid").alias("g"), selfsim.alias("sim"))
-    within = (
-        mem.select(F.col("vec_id").alias("va"), F.col("rvid").alias("g"))
-        .join(
-            mem.select(F.col("vec_id").alias("vb"), F.col("rvid").alias("g")),
-            "g",
-        )
-        .filter(F.col("va") < F.col("vb"))
-        .join(gsim, "g")
-        # re-apply the threshold: a zero-norm embedding's self-cosine
-        # is NULL under Spark's non-ANSI divide, which the naive
-        # plan's filter drops — without this the rewrite would keep
-        # that pair and break bit-identity on the degenerate edge.
-        # A no-op for normal vectors (self-sim rounds to 1.0).
-        .filter(F.col("sim") >= EMBCOS_T)
-        .select(F.col("va").alias("vec_a"), F.col("vb").alias("vec_b"), "sim")
+    # thresholded too: a zero-norm embedding's self-cosine is NULL
+    # under Spark's non-ANSI divide, which the naive plan's filter
+    # drops — without this the rewrite would keep that group's pairs
+    # and break bit-identity on the degenerate edge. A no-op for
+    # normal vectors (self-sim rounds to 1.0).
+    gsim = groups.select(F.col("rvid").alias("g"), selfsim.alias("sim")).filter(
+        F.col("sim") >= EMBCOS_T
     )
-    return cross.unionByName(within)
+    return expand_collapsed(rp, mem, gsim, pair=("vec_a", "vec_b"))
 
 
 def embcos_candidate_pairs_sql() -> str:
-    """DuckDB mirror of embcos_candidate_pairs() (no sim filter)."""
+    """DuckDB IVF bucket join over every vector (no sim filter): the
+    candidate pairs embcos_near_pairs reproduces from its
+    representatives."""
     from lsd_spark.llm.simsearch import ivf_assign_sql
 
     cos = "ROUND(" + COS_DUCK.format(a="a.embedding", b="b.embedding") + ", 6)"
@@ -1244,28 +1201,7 @@ def llm_dedup_edit(spark, sf_dir):
         .filter(F.col("dist") <= EDIT_REL_T * F.col("mx"))
         .select("ga", "gb", "dist")
     )
-    ma = mem.select(F.col("doc_id").alias("va"), F.col("rid").alias("ga"))
-    mb = mem.select(F.col("doc_id").alias("vb"), F.col("rid").alias("gb"))
-    cross = (
-        rp.join(ma, "ga")
-        .join(mb, "gb")
-        .select(
-            F.least("va", "vb").alias("doc_a"),
-            F.greatest("va", "vb").alias("doc_b"),
-            "dist",
-        )
-    )
-    within = (
-        mem.select(F.col("doc_id").alias("va"), "rid")
-        .join(mem.select(F.col("doc_id").alias("vb"), "rid"), "rid")
-        .filter(F.col("va") < F.col("vb"))
-        .select(
-            F.col("va").alias("doc_a"),
-            F.col("vb").alias("doc_b"),
-            F.lit(0).cast("bigint").alias("dist"),
-        )
-    )
-    return cross.unionByName(within)
+    return expand_collapsed(rp, mem, {"dist": F.lit(0).cast("bigint")})
 
 
 WINNOW_K = 4  # k-gram (words) per hash
@@ -1646,20 +1582,7 @@ def _minhash_scored_over(spark, sf_dir, docs, sig_tag):
             )
         ).alias("x"),
     ).select("doc_id", "x.band", "x.bk")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bk") == F.col("b.bk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+    cand = band_pairs(bands, ["band", "bk"], ("doc_a", "doc_b"))
     sa = sig.select(
         F.col("doc_id").alias("doc_a"),
         F.col("shingles").alias("sh_a"),
@@ -1699,32 +1622,8 @@ def _minhash_hits_collapsed(spark, sf_dir):
         F.col("rid").alias("doc_id"), F.col("r_text").alias("text")
     )
     rep_hits = _minhash_scored_over(spark, sf_dir, rdocs, "minhash_rsig")
-    ma = mem.select(F.col("doc_id").alias("va"), F.col("rid").alias("doc_a"))
-    mb = mem.select(F.col("doc_id").alias("vb"), F.col("rid").alias("doc_b"))
-    cross = (
-        rep_hits.join(ma, "doc_a")
-        .join(mb, "doc_b")
-        .select(
-            F.least("va", "vb").alias("doc_a"),
-            F.greatest("va", "vb").alias("doc_b"),
-            "jaccard",
-            "mh_est",
-        )
-    )
     one = F.round(F.lit(1.0), 4).cast("double")
-    within = (
-        mem.select(F.col("doc_id").alias("doc_a"), F.col("rid").alias("g"))
-        .join(
-            mem.select(F.col("doc_id").alias("doc_b"), F.col("rid").alias("g")),
-            "g",
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select(
-            "doc_a", "doc_b",
-            one.alias("jaccard"), one.alias("mh_est"),
-        )
-    )
-    return cross.unionByName(within)
+    return expand_collapsed(rep_hits, mem, {"jaccard": one, "mh_est": one})
 
 
 @register("llm_dedup_minhash_md5", oracle=_MINHASH_MD5_ORACLE)

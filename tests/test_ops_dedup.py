@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 import pandas as pd
+from pyspark.sql import functions as F
 import pytest
 from lsd_spark.registry import QUERIES, load_all
 from tests.conftest import SF_DIR
@@ -124,6 +125,64 @@ def test_minhash_md5_jaccard_recomputes(spark):
         want = round(len(sa & sb) / len(sa | sb), 4)
         assert abs(r.jaccard - want) < 1e-9
         assert 0.0 <= r.mh_est <= 1.0
+
+
+def _naive_dedup_near(spark, sf_dir):
+    """The reference plan llm_dedup_near's rows are pinned against
+    (the op is rows-only: no oracle covers its pair set): the band
+    self-join carries both shingle arrays, a wide dropDuplicates
+    dedups the pairs, and the Jaccard refine runs last."""
+    from lsd_spark.catalog import load
+    from lsd_spark.llm.dedup import (
+        JACCARD_T, N_BANDS, ROWS_PER_BAND, _shingled, minhash_signature,
+    )
+
+    docs = load(spark, sf_dir, "documents")
+    sig = _shingled(docs).select(
+        "doc_id", "shingles", minhash_signature(F.col("shingles")).alias("mh")
+    )
+    bh = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.xxhash64(
+                *[F.element_at("mh", b * ROWS_PER_BAND + r + 1) for r in range(ROWS_PER_BAND)]
+            ).alias("bh"),
+        )
+        for b in range(N_BANDS)
+    ]
+    bands = sig.select(
+        "doc_id", "shingles", F.explode(F.array(*bh)).alias("bk")
+    ).select("doc_id", "shingles", "bk.band", "bk.bh")
+    a, b = bands.alias("a"), bands.alias("b")
+    cand = (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bh") == F.col("b.bh"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("a.shingles").alias("sh_a"),
+            F.col("b.shingles").alias("sh_b"),
+        )
+        .dropDuplicates(["doc_a", "doc_b"])
+    )
+    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(F.array_union("sh_a", "sh_b"))
+    return (
+        cand.withColumn("jaccard", F.round(jac.cast("double"), 4))
+        .filter(F.col("jaccard") >= JACCARD_T)
+        .select("doc_a", "doc_b", "jaccard")
+    )
+
+
+def test_dedup_near_matches_reference_plan(spark):
+    d = "/root/testdata/sf0.001"
+    got = sorted(map(tuple, QUERIES["llm_dedup_near"](spark, d).collect()))
+    ref = sorted(map(tuple, _naive_dedup_near(spark, d).collect()))
+    assert got == ref
+    assert got, "fixture produced no near-dup pairs"
 
 
 def test_url_dedup_canonical_invariants(spark):

@@ -143,36 +143,88 @@ def test_bucketed_candidate_gen_is_equi_join(spark):
     allowed in these plans is the corpus x N_CENTROIDS assignment,
     which is linear in the corpus; assert it by requiring every BNLJ
     line to involve the tiny broadcast centroid side.)"""
-    from lsd_spark.llm.dedup import (
-        _embcos_near_pairs_build,
-        embcos_candidate_pairs,
-    )
+    from lsd_spark.llm.dedup import _embcos_near_pairs_build
 
-    # embcos_candidate_pairs is the naive generator; the production
-    # path is _embcos_near_pairs_build — since round 8 every consumer
-    # (llm_dedup_embcos, cluster_fof, the graph ops) reads its
-    # ckpt_shared materialization, so the candidate-join shape to pin
-    # lives in the BUILD plan, not the consumers' 0-scan final plans
-    # (those are pinned in tests/test_plan_ratchet.py).
-    for q, df in (
-        ("embcos_near_pairs_build", _embcos_near_pairs_build(spark, SF_DIR)),
-        ("embcos_candidate_pairs", embcos_candidate_pairs(spark, SF_DIR)),
-    ):
-        p = plan(df, mode="simple")
-        assert "CartesianProduct" not in p, f"{q}:\n{p}"
-        pair_joins = [
-            ln
-            for ln in p.splitlines()
-            if ("SortMergeJoin" in ln or "ShuffledHashJoin" in ln or "BroadcastHashJoin" in ln)
-            and "centroid_id" in ln
-        ]
-        assert pair_joins, f"{q} candidate join not equi on centroid_id:\n{p}"
-        # every nested-loop line is the linear corpus x centroids
-        # assignment (broadcast side = N_CENTROIDS rows), never a
-        # corpus x corpus pair join
-        for ln in p.splitlines():
-            if "BroadcastNestedLoopJoin" in ln:
-                assert "Cross" in ln or "BuildRight" in ln, f"{q}:\n{p}"
+    # the production path is _embcos_near_pairs_build — since round 8
+    # every consumer (llm_dedup_embcos, cluster_fof, the graph ops)
+    # reads its ckpt_shared materialization, so the candidate-join
+    # shape to pin lives in the BUILD plan, not the consumers' 0-scan
+    # final plans (those are pinned in tests/test_plan_ratchet.py).
+    p = plan(_embcos_near_pairs_build(spark, SF_DIR), mode="simple")
+    assert "CartesianProduct" not in p, p
+    pair_joins = [
+        ln
+        for ln in p.splitlines()
+        if ("SortMergeJoin" in ln or "ShuffledHashJoin" in ln or "BroadcastHashJoin" in ln)
+        and "centroid_id" in ln
+    ]
+    assert pair_joins, f"candidate join not equi on centroid_id:\n{p}"
+    # every nested-loop line is the linear corpus x centroids
+    # assignment (broadcast side = N_CENTROIDS rows), never a
+    # corpus x corpus pair join
+    for ln in p.splitlines():
+        if "BroadcastNestedLoopJoin" in ln:
+            assert "Cross" in ln or "BuildRight" in ln, p
+
+
+def _plan_nodes(node, under_agg=False):
+    """(node, below an Aggregate?) for every node of a Catalyst plan."""
+    yield node, under_agg
+    under_agg = under_agg or node.nodeName() == "Aggregate"
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i), under_agg)
+
+
+def _band_builder(name, spark, sf_dir):
+    from lsd_spark.catalog import load
+    from lsd_spark.llm import dedup
+
+    if name == "llm_dedup_near":
+        return QUERIES[name](spark, sf_dir)
+    if name == "simhash_naive":
+        return dedup._simhash_naive(spark, sf_dir)
+    if name == "minhash_scored_over":
+        docs = load(spark, sf_dir, "documents")
+        return dedup._minhash_scored_over(spark, sf_dir, docs, "minhash_sig")
+    return dedup._embcos_near_pairs_build(spark, sf_dir)
+
+
+@pytest.mark.parametrize(
+    "name,refine",
+    [
+        # (builder, markers of its refine predicate — given where the
+        # score is computed before the pair dedup)
+        ("llm_dedup_near", ("jaccard", "array_intersect")),
+        ("simhash_naive", ("hamming", "bit_count")),
+        ("minhash_scored_over", ()),
+        ("embcos_near_pairs_build", ()),
+    ],
+)
+def test_band_pairs_refine_before_a_slim_dedup(spark, name, refine):
+    """The banded candidate join dedups pairs seen in several bands.
+    That dedup must group pair keys and scores only, never an array
+    payload (shingles, embeddings) — and where the score is computed
+    before it, the exact refine must run below it, so the dedup
+    shuffles the refine's survivors, not every band collision
+    (2.27 M simhash candidates against 127 k survivors at sf0.1)."""
+    df = _band_builder(name, spark, "/root/testdata/sf0.001")
+    nodes = list(_plan_nodes(df._jdf.queryExecution().optimizedPlan()))
+    aggs = [n for n, _ in nodes if n.nodeName() == "Aggregate"]
+    assert aggs, f"{name}: no pair dedup in the plan"
+    for agg in aggs:
+        out = agg.output()
+        types = [out.apply(i).dataType().typeName() for i in range(out.size())]
+        assert "array" not in types, f"{name} dedups array payloads:\n{agg}"
+    refines = [
+        (n, under)
+        for n, under in nodes
+        if n.nodeName() in ("Filter", "Join")
+        and any(m in n.simpleString(100) for m in refine)
+    ]
+    assert bool(refines) == bool(refine), f"{name}: refine not found"
+    for n, under in refines:
+        assert under, f"{name}: refine above the pair dedup:\n{n}"
 
 
 # --- aggregation: map-side combine ----------------------------------------

@@ -9,6 +9,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from lsd_spark.catalog import TABLES, table_path  # noqa: E402
 
 SF_DIR = os.environ.get("LSD_TEST_SF_DIR", "/root/testdata/sf0.01")
+# the smallest catalog, next to SF_DIR: for plan-shape and reference-plan checks
+SF_SMALL = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
 
 
 @pytest.fixture(scope="session")

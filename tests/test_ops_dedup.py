@@ -11,7 +11,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 import pytest
 from lsd_spark.registry import QUERIES, load_all
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, SF_SMALL
 import hashlib
 import math
 import numpy as np
@@ -178,9 +178,8 @@ def _naive_dedup_near(spark, sf_dir):
 
 
 def test_dedup_near_matches_reference_plan(spark):
-    d = "/root/testdata/sf0.001"
-    got = sorted(map(tuple, QUERIES["llm_dedup_near"](spark, d).collect()))
-    ref = sorted(map(tuple, _naive_dedup_near(spark, d).collect()))
+    got = sorted(map(tuple, QUERIES["llm_dedup_near"](spark, SF_SMALL).collect()))
+    ref = sorted(map(tuple, _naive_dedup_near(spark, SF_SMALL).collect()))
     assert got == ref
     assert got, "fixture produced no near-dup pairs"
 

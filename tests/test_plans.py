@@ -20,7 +20,7 @@ from contextlib import redirect_stdout
 import pytest
 
 from lsd_spark.registry import QUERIES, load_all
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, SF_SMALL
 
 load_all()
 
@@ -208,7 +208,7 @@ def test_band_pairs_refine_before_a_slim_dedup(spark, name, refine):
     before it, the exact refine must run below it, so the dedup
     shuffles the refine's survivors, not every band collision
     (2.27 M simhash candidates against 127 k survivors at sf0.1)."""
-    df = _band_builder(name, spark, "/root/testdata/sf0.001")
+    df = _band_builder(name, spark, SF_SMALL)
     nodes = list(_plan_nodes(df._jdf.queryExecution().optimizedPlan()))
     aggs = [n for n, _ in nodes if n.nodeName() == "Aggregate"]
     assert aggs, f"{name}: no pair dedup in the plan"

@@ -266,12 +266,16 @@ def expand_collapsed(rep_pairs, mem, within, pair=("doc_a", "doc_b")):
 
 def minhash_signature(shingles_col):
     """H independent minhashes via xxhash64(shingle, seed) — fixed
-    seeds 0..H-1, fully deterministic, JVM-side."""
+    seeds 0..H-1, fully deterministic, JVM-side. Each transform gets
+    a one-parameter lambda that closes over its seed: PySpark binds a
+    second lambda parameter to the element index, not to a default."""
+
+    def seeded(seed):
+        return lambda s: F.xxhash64(s, F.lit(seed))
+
     return F.array(
         *[
-            F.array_min(
-                F.transform(shingles_col, lambda s, seed=seed: F.xxhash64(s, F.lit(seed)))
-            )
+            F.array_min(F.transform(shingles_col, seeded(seed)))
             for seed in range(N_HASHES)
         ]
     )

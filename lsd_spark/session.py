@@ -8,6 +8,9 @@ Defaults chosen for oracle parity and scale posture:
   LSD pool2's dynamic load balancing [lsd:src/lsd/pool2.py — UNVERIFIED].
 - Arrow on for all pandas UDF / toPandas paths (LSD's ColGroup
   batches ≈ Arrow record batches, SURVEY.md §1.1).
+- Generated-class cache sized for the operator set: Spark keeps 100
+  generated classes by default, and one pass over the headline ops
+  needs about 200, so every repeat pass evicted and recompiled them.
 """
 
 from __future__ import annotations
@@ -64,6 +67,9 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(sp))
+        # static: the JVM sizes its generated-class cache at the first
+        # compile, so only the builder can set it
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config(
             "spark.sql.sources.parallelPartitionDiscovery.parallelism",
             _listing_parallelism(int(cpus)),

@@ -25,6 +25,12 @@ the file manifests of commits 1..n. This module implements the log:
   1..n and hands Spark exactly that file list — time travel is just
   "stop reading the log at n". Reading the log is driver-side
   metadata work, |commits|-sized, like every table format's.
+- every parquet scan over manifest files goes through
+  `scan_parquet`, which takes the read schema from the footer key
+  Spark wrote (`SPARK_SCHEMA_KEY`) of the smallest path, the file
+  Spark's own inference would open. Planning a read therefore costs
+  the log walk plus one footer, and starts no Spark job; stats and
+  row counts come from the same footers.
 
 100 TB: data files never move or rewrite on commit (append = link
 one JSON). The read path is CHECKPOINTED (round-10 VERDICT missing
@@ -147,6 +153,32 @@ def write_data_files(df: DataFrame, path: str, tag: str) -> list[str]:
         for f in os.listdir(out)
         if f.endswith(".parquet")
     )
+
+
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def scan_parquet(spark: SparkSession, files: list[str]) -> DataFrame:
+    """The one parquet scan over manifest files, planned without a
+    Spark job. With `mergeSchema` off, Spark's schema inference sorts
+    the leaf files by path, reads the first one's footer in a
+    one-task job, and prefers the schema Spark stored under
+    SPARK_SCHEMA_KEY. This reads that same key from `min(files)` on
+    the driver and hands it over as the read schema, so planning
+    opens one footer and starts no job. A file without the key
+    (another writer) or a session with
+    `spark.sql.parquet.mergeSchema` on gets Spark's own inference."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    merge = spark.conf.get("spark.sql.parquet.mergeSchema", "false")
+    if merge.lower() != "true":
+        meta = pq.read_metadata(min(files)).metadata or {}
+        raw = meta.get(SPARK_SCHEMA_KEY)
+        if raw is not None:
+            schema = StructType.fromJson(json.loads(raw))
+            return spark.read.schema(schema).parquet(*files)
+    return spark.read.parquet(*files)
 
 
 def stage_sliced_files(
@@ -449,7 +481,7 @@ def compact(
         total = sum(os.path.getsize(f) for f in old)
         n_out = max(1, -(-total // target_file_bytes))
         new = write_data_files(
-            spark.read.parquet(*old).coalesce(n_out),
+            scan_parquet(spark, old).coalesce(n_out),
             path,
             f"compact-v{v}a{attempt}-{writer}",
         )
@@ -829,10 +861,10 @@ def read_version(
     manifest-level data skipping first (files whose committed
     [min, max] for `col` cannot intersect [lo, hi] are never opened);
     the caller still applies its row filter — skipping changes IO,
-    never results. A fully-pruned manifest returns an empty frame
-    with the table's schema (planned from one surviving... there is
-    none, so from the unpruned first file's footer via a LIMIT 0
-    read)."""
+    never results. Planning starts no Spark job (see scan_parquet).
+    A fully-pruned manifest returns an empty frame with the table's
+    schema: a LIMIT 0 scan of the unpruned manifest's first file,
+    whose schema comes from that file's footer."""
     if prune is not None:
         col, lo, hi = prune
         files, _total = manifest_pruned(path, version, col, lo, hi)
@@ -842,12 +874,12 @@ def read_version(
                 raise ValueError(
                     f"table at {path} has no commit <= {version}"
                 )
-            return spark.read.parquet(all_files[0]).limit(0)
-        return spark.read.parquet(*files)
+            return scan_parquet(spark, all_files[:1]).limit(0)
+        return scan_parquet(spark, files)
     files = manifest(path, version)
     if not files:
         raise ValueError(f"table at {path} has no commit <= {version}")
-    return spark.read.parquet(*files)
+    return scan_parquet(spark, files)
 
 
 def changed_files(
@@ -906,17 +938,18 @@ def read_changes(
     """Incremental read: the rows ADDED in (since_version, version]
     (version=None reads to the head), as one parquet scan over
     exactly the committing entries' files — compaction-invisible
-    (see changed_files). An empty change set returns an empty frame
-    with the table's schema, planned from a current-manifest file's
-    footer, so consumers can union/aggregate without special-casing
-    the no-news poll."""
+    (see changed_files). Planning starts no Spark job (see
+    scan_parquet). An empty change set returns an empty frame with
+    the table's schema, a LIMIT 0 scan of the current manifest's
+    first file, so consumers can union/aggregate without
+    special-casing the no-news poll."""
     files, v1 = changed_files(path, since_version, version)
     if files:
-        return spark.read.parquet(*files)
+        return scan_parquet(spark, files)
     all_files = manifest(path, v1)
     if not all_files:
         raise ValueError(f"table at {path} has no commit <= {v1}")
-    return spark.read.parquet(all_files[0]).limit(0)
+    return scan_parquet(spark, all_files[:1]).limit(0)
 
 
 def _uri_to_path(p: str) -> str:
@@ -1030,7 +1063,7 @@ def delete_where(
         n_del = 0
         if candidates:
             hits = (
-                spark.read.parquet(*candidates)
+                scan_parquet(spark, candidates)
                 .filter(cond)
                 .groupBy(F.col("_metadata.file_path").alias("_f"))
                 .agg(F.count("*").alias("_n"))
@@ -1049,7 +1082,7 @@ def delete_where(
         # removes rows whose predicate is literally true, so a NULL
         # predicate keeps its row — plain ~cond would drop it.
         new = write_data_files(
-            spark.read.parquet(*touched).filter(
+            scan_parquet(spark, touched).filter(
                 F.coalesce(~cond, F.lit(True))
             ),
             path,
@@ -1163,7 +1196,7 @@ def merge_into(
             touched = sorted(
                 _uri_to_path(r["_f"])
                 for r in (
-                    spark.read.parquet(*candidates)
+                    scan_parquet(spark, candidates)
                     .select(
                         F.col("_metadata.file_path").alias("_f"), *keys
                     )
@@ -1178,7 +1211,7 @@ def merge_into(
                 )
             )
         if touched:
-            base = spark.read.parquet(*touched)
+            base = scan_parquet(spark, touched)
             n_base = _staged_rows(touched)
             merged = base.join(
                 F.broadcast(src.select(*keys)), on=keys, how="left_anti"
@@ -1764,7 +1797,7 @@ def stream_table_log_sink(spark, sf_dir):
             )
         shutil.rmtree(tmp)
         init_table(table)
-        schema = spark.read.parquet(os.path.join(stage, "000.parquet")).schema
+        schema = scan_parquet(spark, [os.path.join(stage, "000.parquet")]).schema
         src = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
@@ -1857,7 +1890,7 @@ def compact_zorder(
                 f"nothing to compact at {path}: no visible data files at "
                 f"version {v}"
             )
-        df = spark.read.parquet(*old)
+        df = scan_parquet(spark, old)
         mx = (
             col_max
             if col_max is not None

@@ -10,7 +10,9 @@ time instead of at the driver's next scan.
 The markers are assembled from fragments at runtime so this file
 itself can never satisfy a literal grep for them."""
 
+import os
 import subprocess
+from fnmatch import fnmatch
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -30,11 +32,47 @@ MARKERS = [
 ALLOWED: set[str] = set()
 
 
+def _ignored(rel: str, patterns: list[str]) -> bool:
+    """Whether `rel` falls under a .gitignore pattern, each matched
+    against every path component (one ending in `/` against the
+    directories only). An unmatched file is scanned."""
+    parts = rel.split("/")
+    for pat in patterns:
+        dirs_only = pat.endswith("/")
+        names = parts[:-1] if dirs_only else parts
+        if any(fnmatch(p, pat.rstrip("/")) for p in names):
+            return True
+    return False
+
+
+def _walked_files():
+    """The working tree minus .git and what .gitignore names: the
+    file set outside a git checkout (e.g. a `git archive` export),
+    where `git ls-files` fails."""
+    with open(ROOT / ".gitignore") as fh:
+        patterns = [
+            ln.strip() for ln in fh if ln.strip() and not ln.startswith("#")
+        ]
+    out = []
+    for d, dirs, files in os.walk(ROOT):
+        dirs[:] = [x for x in dirs if x != ".git"]
+        for f in files:
+            rel = os.path.relpath(os.path.join(d, f), ROOT).replace(os.sep, "/")
+            if not _ignored(rel, patterns):
+                out.append(rel)
+    return out
+
+
 def _tracked_files():
-    out = subprocess.run(
-        ["git", "ls-files"], cwd=ROOT, capture_output=True, text=True, check=True
-    )
-    return [f for f in out.stdout.splitlines() if f not in ALLOWED]
+    try:
+        out = subprocess.run(
+            ["git", "ls-files"], cwd=ROOT, capture_output=True, text=True,
+            check=True,
+        )
+        files = out.stdout.splitlines()
+    except (OSError, subprocess.CalledProcessError):
+        files = _walked_files()
+    return [f for f in files if f not in ALLOWED]
 
 
 def test_no_leak_markers_in_working_tree():
@@ -52,6 +90,15 @@ def test_no_leak_markers_in_working_tree():
         "leak markers present in tracked working-tree files "
         f"(category, file): {bad}"
     )
+
+
+def test_tree_walk_covers_tracked_files():
+    """The fallback file set holds every tracked file, so outside a
+    checkout the leak check scans at least what `git ls-files` names
+    inside one."""
+    walked = set(_walked_files())
+    assert "tests/test_leakcheck.py" in walked
+    assert set(_tracked_files()) <= walked
 
 
 def test_leakcheck_summary_is_current_and_flat():

@@ -184,6 +184,26 @@ def test_dedup_near_matches_reference_plan(spark):
     assert got, "fixture produced no near-dup pairs"
 
 
+def test_minhash_signature_uses_every_seed(spark):
+    """Each of the N_HASHES minhashes hashes with its own seed: one
+    document's values are not all equal, and the plan carries one
+    distinct seed literal per xxhash64."""
+    import re
+
+    from lsd_spark.llm.dedup import N_HASHES, minhash_signature
+
+    docs = spark.createDataFrame(
+        [(["a b c", "b c d", "c d e", "d e f"],)], "sh array<string>"
+    )
+    sig = docs.select(minhash_signature(F.col("sh")).alias("mh"))
+    mh = sig.first().mh
+    assert len(mh) == N_HASHES
+    assert len(set(mh)) > 1, "all minhashes equal"
+    plan = sig._jdf.queryExecution().optimizedPlan().toString()
+    seeds = re.findall(r"xxhash64\(lambda [^,]+, (\d+), 42\)", plan)
+    assert sorted(map(int, seeds)) == list(range(N_HASHES))
+
+
 def test_url_dedup_canonical_invariants(spark):
     out = QUERIES["llm_dedup_url"](spark, SF_DIR).toPandas()
     assert len(out) > 0

@@ -110,6 +110,16 @@ def test_session_conf_unsets_key_that_was_unset(spark):
             spark.conf.set(key, old)
 
 
+def test_codegen_cache_holds_the_operator_set(spark):
+    """get_spark sizes the generated-class cache above the ~200
+    classes one pass over the headline ops needs (Spark's default
+    of 100 evicts them, so every repeat pass recompiles). The conf is
+    static, so the JVM's SQLConf shows what the cache was built
+    with."""
+    conf = spark._jsparkSession.sessionState().conf()
+    assert conf.getConfString("spark.sql.codegen.cache.maxEntries") == "1000"
+
+
 # ---- guard: partition counts are decided in one place -------------------
 
 _SIZING_READS = ("defaultParallelism", "getNumPartitions")

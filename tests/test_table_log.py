@@ -1073,3 +1073,120 @@ def test_copy_staged_orphan_invisible_and_vacuumable(spark, tmp_path):
     assert tl.read_version(spark, base, 1).count() == 1  # invisible
     deleted, freed = tl.vacuum(base, min_age_sec=0.0)
     assert set(deleted) >= set(orph) and freed > 0
+
+
+def _jobs_started(spark, fn, gid):
+    """Spark jobs `fn` starts, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(gid, "table-log read planning")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_read_planning_starts_no_spark_job(spark, tmp_path, monkeypatch):
+    """Planning a read takes the schema from one footer on the
+    driver: read_version (plain, pruned, fully pruned), read_changes
+    (new rows and the empty poll) and compact's input scan start no
+    Spark job. Spark's own inference runs a job per plan."""
+    base = str(tmp_path / "t")
+    tl.init_table(base)
+    for i in range(2):
+        fs = tl.write_data_files(_mk(spark, [(i, 1.0 * i)]), base, f"c{i}")
+        tl.commit(base, fs, "A", stats=tl.parquet_file_stats(fs, ["k"]))
+
+    class Planned(Exception):
+        pass
+
+    def stop_before_write(df, path, tag):
+        df.schema
+        raise Planned
+
+    def compact_scan():
+        monkeypatch.setattr(tl, "write_data_files", stop_before_write)
+        with pytest.raises(Planned):
+            tl.compact(spark, base)
+
+    plans = {
+        "read_version": lambda: tl.read_version(spark, base, 2).schema,
+        "read_version pruned": lambda: tl.read_version(
+            spark, base, 2, prune=("k", 1, 1)).schema,
+        "read_version fully pruned": lambda: tl.read_version(
+            spark, base, 2, prune=("k", 50, 60)).schema,
+        "read_changes": lambda: tl.read_changes(spark, base, 0).schema,
+        "read_changes empty": lambda: tl.read_changes(spark, base, 2).schema,
+        "compact input scan": compact_scan,
+    }
+    started = {
+        name: _jobs_started(spark, fn, f"tlog-plan-{i}")
+        for i, (name, fn) in enumerate(plans.items())
+    }
+    assert started == {name: 0 for name in plans}
+
+
+def _spark_inferred(spark, files):
+    return spark.read.parquet(*files).schema
+
+
+def test_scan_schema_equals_spark_inference(spark, tmp_path):
+    """For Spark-written files the footer schema is the one Spark
+    infers, nested, decimal, date/time and non-null columns too."""
+    df = spark.sql(
+        "SELECT id AS k, CAST(id AS DECIMAL(12, 3)) AS d, "
+        "CAST(id AS INT) AS i, 'x' AS s, DATE'2024-01-02' AS dt, "
+        "TIMESTAMP'2024-01-02 03:04:05' AS ts, array(id, id) AS arr, "
+        "named_struct('a', id, 'b', CAST(id AS STRING)) AS st, "
+        "map('m', id) AS mp FROM range(4)"
+    )
+    files = tl.write_data_files(df.repartition(2), str(tmp_path), "w")
+    assert len(files) == 2
+    got = tl.scan_parquet(spark, files)
+    assert got.schema == _spark_inferred(spark, files)
+    assert got.count() == 4
+
+
+def test_scan_schema_is_smallest_paths_schema(spark, tmp_path):
+    """Files with different columns: the schema is the smallest
+    path's, whatever the list order, as in Spark's inference (no
+    merge). With mergeSchema on, Spark's merged schema."""
+    fa = tl.write_data_files(_mk(spark, [(1, 1.0)]), str(tmp_path), "a")
+    fb = tl.write_data_files(
+        spark.createDataFrame([(2, "y")], "k bigint, w string"),
+        str(tmp_path), "b",
+    )
+    files = fb + fa
+    got = tl.scan_parquet(spark, files).schema
+    assert got == _spark_inferred(spark, fa)
+    assert got == _spark_inferred(spark, files)
+    assert got.fieldNames() == ["k", "v"]
+    key = "spark.sql.parquet.mergeSchema"
+    spark.conf.set(key, "true")
+    try:
+        merged = tl.scan_parquet(spark, files).schema
+        assert merged == _spark_inferred(spark, files)
+        assert merged.fieldNames() == ["k", "v", "w"]
+    finally:
+        spark.conf.unset(key)
+
+
+def test_scan_schema_without_spark_key(spark, tmp_path):
+    """A file from another writer carries no Spark schema key, so
+    the scan falls back to Spark's inference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    f = str(tmp_path / "other.parquet")
+    pq.write_table(
+        pa.table({
+            "k": pa.array([1, 2], pa.int32()),
+            "s": ["a", None],
+            "ts": pa.array([0, 1], pa.timestamp("us")),
+        }),
+        f,
+    )
+    assert tl.SPARK_SCHEMA_KEY not in (pq.read_metadata(f).metadata or {})
+    got = tl.scan_parquet(spark, [f])
+    assert got.schema == _spark_inferred(spark, [f])
+    assert sorted(r.k for r in got.collect()) == [1, 2]

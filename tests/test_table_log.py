@@ -357,16 +357,30 @@ def test_claim_seam_conditional_put_mock_two_writer_race(tmp_path):
         tl.CLAIM["fn"] = orig
 
 
-def test_compact_conflict_detection_and_empty_guard(spark, tmp_path):
-    """Round-12 ADVICE: (a) compact() on an empty table raises a
-    clear ValueError instead of a confusing zero-path read; (b) a
-    compaction that lost the race to ANOTHER compaction raises
-    ConcurrentCompactionError instead of publishing a duplicate
-    consolidated copy (the double-rows hazard)."""
+# each compactor with the data dir its staged output lands in
+_COMPACTORS = {
+    "compact": (tl.compact, "/compact-v"),
+    "compact_zorder": (
+        lambda spark, base: tl.compact_zorder(spark, base, "id", n_out=2),
+        "/zorder-v",
+    ),
+}
+
+
+@pytest.mark.parametrize("compactor", list(_COMPACTORS))
+def test_compact_conflict_detection_and_empty_guard(
+    spark, tmp_path, compactor
+):
+    """Round-12 ADVICE, for both compactors: (a) compacting an empty
+    table raises a clear ValueError instead of a confusing zero-path
+    read; (b) a compaction that lost the race to ANOTHER compaction
+    raises ConcurrentCompactionError instead of publishing a
+    duplicate consolidated copy (the double-rows hazard)."""
+    run, staged_dir = _COMPACTORS[compactor]
     base = str(tmp_path / "t")
     tl.init_table(base)
     with pytest.raises(ValueError, match="nothing to compact"):
-        tl.compact(spark, base)
+        run(spark, base)
 
     df = spark.range(10).selectExpr("id", "id * 2 AS v")
     for i in range(2):
@@ -396,7 +410,7 @@ def test_compact_conflict_detection_and_empty_guard(spark, tmp_path):
     tl.CLAIM["fn"] = inject_rival_then_claim
     try:
         with pytest.raises(tl.ConcurrentCompactionError):
-            tl.compact(spark, base)
+            run(spark, base)
     finally:
         tl.CLAIM["fn"] = orig
     # the rival's consolidation stands; no duplicate rows
@@ -404,7 +418,7 @@ def test_compact_conflict_detection_and_empty_guard(spark, tmp_path):
     assert tl.read_version(spark, base, head).count() == 20
     # our aborted compactor's staged files are vacuumable orphans
     deleted, _ = tl.vacuum(base, min_age_sec=0.0)
-    assert any("/compact-v" in p for p in deleted)
+    assert any(staged_dir in p for p in deleted)
     assert tl.read_version(spark, base, head).count() == 20
 
 
@@ -496,9 +510,9 @@ def test_data_skipping_point_predicate_opens_one_file(spark, tmp_path):
 def test_compact_zorder_disjoint_files_and_conflict(spark, tmp_path):
     """compact_zorder: deterministic bucket arithmetic yields
     range-DISJOINT per-file stats (a point probe prunes to one
-    file), rows survive byte-exactly, time travel still resolves the
-    interleaved originals, and a rival compaction still trips the
-    conflict check through the shared publish loop."""
+    file), rows survive byte-exactly, and time travel still resolves
+    the interleaved originals. The rival-compaction abort is tested
+    by test_compact_conflict_detection_and_empty_guard."""
     base = str(tmp_path / "t")
     tl.init_table(base)
     df = spark.range(1, 401).selectExpr("id AS k", "id * 2 AS v")
@@ -1190,3 +1204,131 @@ def test_scan_schema_without_spark_key(spark, tmp_path):
     got = tl.scan_parquet(spark, [f])
     assert got.schema == _spark_inferred(spark, [f])
     assert sorted(r.k for r in got.collect()) == [1, 2]
+
+
+def test_commit_conflict_rule_follows_entry_kind(tmp_path):
+    """commit() picks the conflict rule from the entry's kind against
+    the commits after `snapshot` (fake-file protocol test): an append
+    lands past rivals, a row-level rewrite claims only snapshot + 1
+    (an empty `removes` too), and a compaction passes rival appends
+    but stops at a rival compaction."""
+    base = str(tmp_path / "t")
+    tl.init_table(base)
+    tl.commit(base, ["data/a/1.parquet"], "A")
+    snap = tl.latest_version(base)
+    tl.commit(base, ["data/b/2.parquet"], "B")  # rival append
+    assert tl.commit(base, ["data/a/3.parquet"], "A", snapshot=snap) == 3
+    for removes in (["data/a/1.parquet"], []):
+        assert tl.commit(
+            base, ["data/m/x.parquet"], "M", removes=removes, snapshot=snap
+        ) is None
+    assert tl.latest_version(base) == 3  # the lost rewrites left no entry
+    v = tl.commit(
+        base, ["data/c/all.parquet"], "C",
+        compacts=tl.manifest(base, snap), snapshot=snap,
+    )
+    assert v == 4  # rival appends 2 and 3 keep their files
+    assert sorted(tl.manifest(base, 4)) == [
+        "data/a/3.parquet", "data/b/2.parquet", "data/c/all.parquet"
+    ]
+    with pytest.raises(tl.ConcurrentCompactionError, match="commit 4"):
+        tl.commit(
+            base, ["data/d/all.parquet"], "D",
+            compacts=tl.manifest(base, 3), snapshot=3,
+        )
+    assert tl.latest_version(base) == 4
+    assert tl.commit(
+        base, ["data/m/y.parquet"], "M", removes=[], snapshot=4
+    ) == 5
+
+
+def test_publish_path_lives_in_commit():
+    """Guard: commit() is the one library function that claims a
+    version (try_commit) or writes a checkpoint (write_checkpoint).
+    The only other try_commit callers allowed are @register op
+    builders, which stage races on purpose (sink_table_log). A second
+    publish path in table_log.py fails here."""
+    import ast
+
+    with open(tl.__file__) as fh:
+        tree = ast.parse(fh.read())
+    bad = []
+    for top in tree.body:
+        owner = getattr(top, "name", None)
+        registered = any(
+            isinstance(d, ast.Call)
+            and getattr(d.func, "id", None) == "register"
+            for d in getattr(top, "decorator_list", ())
+        )
+        for node in ast.walk(top):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            fn = getattr(f, "id", None) or getattr(f, "attr", None)
+            if fn == "write_checkpoint" and owner != "commit":
+                bad.append(f"{owner}:{node.lineno} calls write_checkpoint")
+            if fn == "try_commit" and owner != "commit" and not registered:
+                bad.append(f"{owner}:{node.lineno} calls try_commit")
+    assert not bad, "publish paths outside commit():\n" + "\n".join(bad)
+
+
+def test_compact_zorder_takes_max_from_committed_stats(spark, tmp_path):
+    """compact_zorder reads MAX(col) from the snapshot's integer stats,
+    so it starts fewer jobs than on a stat-less table (no aggregate)
+    and writes the same bucket boundaries."""
+    df = spark.range(1, 201).selectExpr("id AS k", "id * 2 AS v")
+    ranges, jobs = {}, {}
+    for with_stats in (True, False):
+        base = str(tmp_path / f"t{with_stats}")
+        tl.init_table(base)
+        for i in range(2):
+            fs = tl.write_data_files(
+                df.filter(f"k % 2 = {i}").coalesce(1), base, f"i{i}"
+            )
+            stats = tl.parquet_file_stats(fs, ["k"]) if with_stats else None
+            tl.commit(base, fs, "A", stats=stats)
+        jobs[with_stats] = _jobs_started(
+            spark, lambda: tl.compact_zorder(spark, base, "k", n_out=4),
+            f"tlog-zorder-{with_stats}",
+        )
+        _files, stats, _ = tl._log_state(base, 3)
+        ranges[with_stats] = sorted(tuple(b["k"]) for b in stats.values())
+    assert ranges[True] == ranges[False] == [
+        (1, 50), (51, 100), (101, 150), (151, 200)
+    ]
+    assert jobs[True] < jobs[False], jobs
+
+
+def test_stream_source_streams_decimal_and_nested_columns(spark, tmp_path):
+    """The stream source declares the schema Spark stored in the
+    smallest committed file's footer, so decimal, array, struct, map
+    and date columns stream, with the rows read_version returns."""
+    base = str(tmp_path / "t")
+    tl.init_table(base)
+    df = spark.sql(
+        "SELECT id AS k, CAST(id * 1.25 AS DECIMAL(12, 2)) AS d, "
+        "array(id, id + 1) AS arr, "
+        "named_struct('a', id, 'b', CAST(id AS STRING)) AS st, "
+        "map('m', id) AS mp, DATE'2024-01-02' AS dt FROM range(6)"
+    )
+    for i in range(2):
+        fs = tl.write_data_files(
+            df.filter(f"k % 2 = {i}").coalesce(1), base, f"c{i}"
+        )
+        tl.commit(base, fs, "A")
+    cls = tl.make_table_log_datasource()
+    assert cls(options={"path": base}).schema() == (
+        "k bigint, d decimal(12,2), arr array<bigint>, "
+        "st struct<a:bigint,b:string>, mp map<string,bigint>, dt date"
+    )
+    spark.dataSource.register(cls)
+    q = (
+        spark.readStream.format("lsd_table_log").option("path", base).load()
+        .writeStream.format("memory").queryName("tlog_nested")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
+    got = sorted(spark.table("tlog_nested").collect(), key=lambda r: r.k)
+    want = sorted(tl.read_version(spark, base, 2).collect(), key=lambda r: r.k)
+    assert len(got) == 6 and got == want
